@@ -726,22 +726,20 @@ def _canon_fixture() -> list[str]:
 
 def q_kg_canonical_mapping(spark, sf_dir):
     """Entity canonicalization (north-rule stage), forced down the fully
-    DISTRIBUTED path (``driver_threshold=0``): normalize → salted distinct →
-    token blocking → char-trigram containment (basis points, exact integer
-    compare) → connected components → longest-member representative,
-    slugged. The driver fast path is equality-tested against this plan in
-    tests; the gate pins the distributed plan against an independent
-    recursive-CTE DuckDB implementation (kg/canonicalize.py:153-236 vs
-    /root/reference has no analogue — this is the engine's own KG tier)."""
+    DISTRIBUTED path (``_surface_canonical_mapping_distributed``): distinct
+    surfaces → normalize → token blocking → char-trigram containment (basis
+    points, exact integer compare) → connected components → longest-member
+    representative, slugged. The driver fast path is equality-tested against
+    this plan in tests; the gate pins the distributed plan against an
+    independent recursive-CTE DuckDB implementation (the reference has no
+    analogue — this is the engine's own KG tier)."""
     from rdf_dataset_fragmenter_js_spark.kg.canonicalize import (
-        surface_canonical_mapping,
+        _surface_canonical_mapping_distributed,
     )
 
     surfaces = _canon_fixture()
     mentions = spark.createDataFrame([(s,) for s in surfaces], "surface string")
-    return surface_canonical_mapping(
-        mentions, containment_threshold=_CANON_THRESHOLD, driver_threshold=0
-    )
+    return _surface_canonical_mapping_distributed(mentions.distinct(), _CANON_THRESHOLD)
 
 
 def q_summary_void_classes(spark, sf_dir):

@@ -23,8 +23,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType
+from pyspark.sql.types import DoubleType
 
 _MASK32 = 0xFFFFFFFF
 
@@ -245,28 +244,6 @@ def _batch_unique_hashes(s: pd.Series):
     return idx, hashes, mask_na
 
 
-def _imurmur_series(s: pd.Series) -> pd.Series:
-    idx, hashes, mask_na = _batch_unique_hashes(s)
-    out = hashes.astype(np.int64)[idx]
-    return pd.Series(pd.arrays.IntegerArray(out, mask_na))
-
-
-def murmur_udf() -> Column:
-    """Factory for the pandas UDF column function (lazily created so importing
-    this module does not require an active SparkSession)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(LongType())
-    def _udf(s: pd.Series) -> pd.Series:
-        return _imurmur_series(s)
-
-    return _udf
-
-
-def murmur_col(col: Column) -> Column:
-    return murmur_udf()(col)
-
-
 def murmur_prob_col(col: Column) -> Column:
     """hash(value) / MURMURHASH3_MAX_VALUE — the reference's deterministic
     sampling score (QuadMatcherTermValue.ts:26-28)."""
@@ -296,14 +273,3 @@ def murmur_hex_col(col: Column) -> Column:
 
     return _udf(col)
 
-
-# ---------------------------------------------------------------------------
-# Engine-portable hashing (Spark & DuckDB compute identical values): md5-based
-# ---------------------------------------------------------------------------
-
-
-def md5_bucket(col: Column, buckets: int) -> Column:
-    """Deterministic bucket id in [0, buckets) derived from md5 — identical in
-    Spark and DuckDB (used by oracle-checked dedup/sampling operators; conv()
-    of the first 8 hex chars is exact in 64-bit integer range)."""
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long") % buckets

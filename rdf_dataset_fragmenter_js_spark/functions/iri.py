@@ -126,16 +126,6 @@ def resolve_iri(reference: str, base: str) -> str:
     return "".join(out)
 
 
-def strip_hash(iri: str) -> str:
-    """Remove the hash fragment (``QuadSinkFile.ts:44-47``)."""
-    pos = iri.find("#")
-    return iri[:pos] if pos >= 0 else iri
-
-
-def ensure_trailing_slash(iri: str) -> str:
-    return iri if iri.endswith("/") else iri + "/"
-
-
 def resolve_iri_udf_col(reference: Column, base: Column) -> Column:
     """Arrow-batched pandas-UDF RFC3986 resolve.
 
@@ -298,16 +288,3 @@ def resolve_iri_col(reference: Column, base: Column) -> Column:
         )
     )
 
-
-def resolve_literal_col(reference: str, base: Column) -> Column:
-    """Resolve a plan-time-literal reference against a base Column.
-
-    Absolute references collapse to a constant at compile time; everything
-    else goes through the native column resolver (Catalyst constant-folds
-    the reference-side decomposition)."""
-    from pyspark.sql import functions as F
-
-    if _SCHEME_RE.match(reference):
-        # base-independent: §5.2.2 with defined scheme ignores the base
-        return F.lit(resolve_iri(reference, "http://resolve.invalid/"))
-    return resolve_iri_col(F.lit(reference), base)

@@ -1,18 +1,16 @@
 """Entity canonicalization: surface forms → canonical entity ids.
 
-Pipeline (north rule: "salted groupBy + MinHash/connected-components"):
+Pipeline:
 
-1. normalize surfaces (lower, strip punctuation/initials);
-2. salted exact grouping — the groupBy key is ``(norm, salt)`` with
-   ``salt = md5(surface) % SALTS`` so one hot surface form ("Acme Corp" on
-   half the web) never lands on a single reducer; partial aggregates merge
-   in a second, tiny groupBy over at most SALTS rows per key;
-3. MinHash-LSH over name character shingles to produce candidate pairs of
-   *different* normalized forms that are likely the same entity
-   ("alice johnson" ~ "alice r johnson");
-4. connected components over candidate pairs (iterative min-label
-   propagation) → cluster id = lexicographic min normalized form;
-5. entity id = cluster representative, slugged.
+1. normalize surfaces (lower, strip punctuation and initials) and keep
+   the distinct forms — a vocabulary, orders of magnitude smaller than the
+   mention stream;
+2. token blocking: forms sharing their first or last token are candidate
+   pairs;
+3. verification by character-trigram containment ``|A∩B| / min(|A|,|B|)``;
+4. connected components over the verified pairs (``functions/graph.py``
+   union-find on the driver, min-label propagation when distributed);
+5. entity id = longest cluster member, slugged.
 """
 
 from __future__ import annotations
@@ -20,9 +18,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rdf_dataset_fragmenter_js_spark.textops.dedup import near_dup_clusters
+from rdf_dataset_fragmenter_js_spark.functions.graph import small_frame, union_find
+from rdf_dataset_fragmenter_js_spark.textops.dedup import (
+    _near_dup_clusters_distributed,
+    shingle_overlap_pairs,
+)
 
-SALTS = 64
+#: Largest vocabulary (distinct normalized forms, or distinct raw surfaces
+#: for :func:`surface_canonical_mapping`) clustered on the driver: the
+#: DataFrame path costs ~10 tiny jobs whose fixed scheduling dwarfs the work
+#: on a vocabulary-sized input (crossover in BENCH.md "Distributed-path
+#: timings", reproducible with tools/distributed_paths_bench.py).
+_DRIVER_FORMS = 100_000
 
 
 def ngram_containment_pairs(
@@ -32,8 +39,6 @@ def ngram_containment_pairs(
     scaled to basis points (exact integer arithmetic). Rides the shared
     persisted-shingle skeleton (textops/dedup.py:shingle_overlap_pairs),
     so the explode+distinct runs once, not once per plan branch."""
-    from rdf_dataset_fragmenter_js_spark.textops.dedup import shingle_overlap_pairs
-
     return shingle_overlap_pairs(
         docs,
         candidates,
@@ -58,22 +63,6 @@ def normalize_surface_col(col):
     c = F.regexp_replace(c, r"[^a-z ]", "")
     toks = F.filter(F.split(c, " "), lambda t: F.length(t) > 1)
     return F.array_join(toks, " ")
-
-
-def surface_counts(mentions: DataFrame, surface_col: str = "surface") -> DataFrame:
-    """Salted two-phase count of surface forms → (norm, n). The first
-    groupBy key carries the salt (hot keys spread over SALTS reducers), the
-    second merges partials."""
-    norm = normalize_surface_col(F.col(surface_col)).alias("norm")
-    salted = mentions.select(
-        norm,
-        (
-            F.conv(F.substring(F.md5(F.col(surface_col).cast("binary")), 1, 8), 16, 10).cast("long")
-            % SALTS
-        ).alias("salt"),
-    )
-    partial = salted.groupBy("norm", "salt").agg(F.count(F.lit(1)).alias("pn"))
-    return partial.groupBy("norm").agg(F.sum("pn").alias("n"))
 
 
 def _shingles3(s: str) -> set:
@@ -112,28 +101,14 @@ def _canonical_mapping_driver_dict(
         members = sorted(set(members))
         pairs.update(itertools.combinations(members, 2))
     sh = {f: _shingles3(f) for f in forms}
-    parent: dict[str, str] = {}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        inter = len(sh[a] & sh[b])
-        bp = inter * 10000 // min(len(sh[a]), len(sh[b]))
-        if bp >= threshold_bp:
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                if rb < ra:
-                    ra, rb = rb, ra
-                parent[rb] = ra
+    verified = (
+        (a, b)
+        for a, b in pairs
+        if len(sh[a] & sh[b]) * 10000 // min(len(sh[a]), len(sh[b])) >= threshold_bp
+    )
     clusters: dict[str, list[str]] = {}
-    for f in parent:
-        clusters.setdefault(find(f), []).append(f)
+    for f, root in union_find(verified).items():
+        clusters.setdefault(root, []).append(f)
     rows = []
     for members in clusters.values():
         rep = min(members, key=lambda m: (-len(m), m))
@@ -142,19 +117,24 @@ def _canonical_mapping_driver_dict(
     return {f: mapped.get(f, f).replace(" ", "_") for f in forms}
 
 
-def _canonical_mapping_driver(
-    spark, forms: list[str], containment_threshold: float
-) -> DataFrame:
-    """DataFrame wrapper over :func:`_canonical_mapping_driver_dict`."""
-    out = list(_canonical_mapping_driver_dict(forms, containment_threshold).items())
-    return spark.createDataFrame(out, "norm string, canonical_id string")
+def _normalized_forms(mentions: DataFrame, surface_col: str) -> DataFrame:
+    """The distinct non-empty normalized forms of ``surface_col`` as
+    DataFrame[norm], materialized once: the gate fetch and every step of the
+    distributed plan (pair join, containment, CC loop) re-reference it, and
+    without cutting lineage each re-reference would re-run the whole
+    upstream extraction over the page corpus."""
+    return (
+        mentions.select(normalize_surface_col(F.col(surface_col)).alias("norm"))
+        .filter(F.col("norm") != "")
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
 
 
 def canonical_mapping(
     mentions: DataFrame,
     surface_col: str = "surface",
     containment_threshold: float = 0.7,
-    driver_threshold: int = 100_000,
 ) -> DataFrame:
     """Build the surface → canonical-id mapping. Returns
     (norm, canonical_id).
@@ -164,37 +144,33 @@ def canonical_mapping(
     is character-trigram CONTAINMENT ``|A∩B| / min(|A|,|B|)`` — the right
     metric for abbreviation aliases ('diaz' ⊂ 'carol diaz' scores 1.0 where
     Jaccard scores 0.25). Connected components merge transitive clusters;
-    cluster id = lexicographic-min member.
+    the canonical id is the longest member, ties broken lexicographically.
 
-    Scale: blocks are bounded (hot surname blocks can be capped/salted); the
-    pair join happens inside blocks only. An alternative MinHash-LSH
-    candidate path is available in textops.dedup for longer texts.
-
-    Two physical strategies behind one API (same split as
-    ``textops.dedup.near_dup_clusters``): the distinct normalized forms are
-    a *vocabulary*, orders of magnitude smaller than the mention stream. At
-    ≤ ``driver_threshold`` forms the blocking/containment/CC steps run as
-    plain Python on the driver — the DataFrame path costs ~10 tiny jobs
-    whose fixed scheduling overhead dwarfs the actual work. Above it, the
-    fully distributed plan runs. Both produce identical mappings; the
-    *application* of the mapping (the expensive corpus-sized part) is always
-    the distributed broadcast join in :func:`apply_canonicalization`."""
-    forms = (
-        mentions.select(normalize_surface_col(F.col(surface_col)).alias("norm"))
-        .filter(F.col("norm") != "")
-        .distinct()
-        # Materialize the (tiny) distinct-forms table once: everything below
-        # re-references it many times (pair join, containment, CC loop) and
-        # without cutting lineage each re-reference would re-run the whole
-        # upstream extraction over the page corpus.
-        .localCheckpoint(eager=True)
+    The distinct normalized forms are a *vocabulary*, orders of magnitude
+    smaller than the mention stream. Up to ``_DRIVER_FORMS`` forms come
+    back in one Arrow fetch and the blocking/containment/CC steps run as
+    plain Python on the driver; above it :func:`_canonical_mapping_distributed`
+    runs. Both produce identical mappings; the *application* of the mapping
+    (the expensive corpus-sized part) is always the distributed broadcast
+    join in :func:`apply_canonicalization`."""
+    forms = _normalized_forms(mentions, surface_col)
+    pdf = small_frame(forms, _DRIVER_FORMS)
+    if pdf is None:
+        return _canonical_mapping_distributed(forms, containment_threshold)
+    out = _canonical_mapping_driver_dict(list(pdf["norm"]), containment_threshold)
+    return mentions.sparkSession.createDataFrame(
+        list(out.items()), "norm string, canonical_id string"
     )
-    if driver_threshold:
-        sample = forms.limit(driver_threshold + 1).collect()
-        if len(sample) <= driver_threshold:
-            return _canonical_mapping_driver(
-                mentions.sparkSession, [r[0] for r in sample], containment_threshold
-            )
+
+
+def _canonical_mapping_distributed(
+    forms: DataFrame, containment_threshold: float
+) -> DataFrame:
+    """The DataFrame plan of :func:`canonical_mapping` over
+    :func:`_normalized_forms`: blocking self-join, containment scores and
+    min-label connected components, all distributed. Blocks are bounded
+    (hot surname blocks can be capped/salted); the pair join happens inside
+    blocks only."""
     docs = forms.select(F.col("norm").alias("doc_id"), F.col("norm").alias("text"))
     toks = F.split(F.col("doc_id"), " ")
     blocked = docs.select(
@@ -214,7 +190,7 @@ def canonical_mapping(
     verified = ngram_containment_pairs(docs, pairs, shingle_size=3).filter(
         F.col("containment_bp") >= int(containment_threshold * 10000)
     )
-    clusters = near_dup_clusters(verified.select("doc_a", "doc_b"))
+    clusters = _near_dup_clusters_distributed(verified.select("doc_a", "doc_b"))
     # cluster representative = LONGEST member (most specific surface form),
     # ties broken lexicographically — 'emma brown' represents {'emma brown',
     # 'brown'}, not the abbreviation.
@@ -238,7 +214,6 @@ def surface_canonical_mapping(
     mentions: DataFrame,
     surface_col: str = "surface",
     containment_threshold: float = 0.7,
-    driver_threshold: int = 100_000,
 ) -> DataFrame:
     """(raw surface → canonical_id) mapping — the scale-path entry point.
 
@@ -251,33 +226,36 @@ def surface_canonical_mapping(
     pipeline scaling at ~1.6× for 4× cores. Application becomes a plain
     broadcast join on the raw surface (no per-row regex at all).
 
-    Below ``driver_threshold`` distinct surfaces the whole mapping build is
-    ONE Spark job (the map-side-combined distinct + collect) followed by
-    driver-side normalize/cluster — the multi-job DataFrame path costs
-    several seconds of fixed scheduling for a vocabulary-sized input, which
-    was the dominant non-scaling term of the end-to-end pipeline."""
+    Up to ``_DRIVER_FORMS`` distinct surfaces, the whole mapping build is
+    the map-side-combined distinct, one Arrow fetch and a driver-side
+    normalize/cluster — the multi-job DataFrame path costs several seconds
+    of fixed scheduling for a vocabulary-sized input, which was the
+    dominant non-scaling term of the end-to-end pipeline. Above it
+    :func:`_surface_canonical_mapping_distributed` runs."""
     raw = (
         mentions.select(F.col(surface_col).alias("surface"))
         .filter(F.col("surface").isNotNull())
         .distinct()
     )
-    if driver_threshold:
-        sample = raw.limit(driver_threshold + 1).collect()
-        if len(sample) <= driver_threshold:
-            surfaces = [r[0] for r in sample]
-            norms = {s: _normalize_surface_py(s) for s in surfaces}
-            forms = sorted({n for n in norms.values() if n})
-            canon = _canonical_mapping_driver_dict(forms, containment_threshold)
-            rows = [(s, canon.get(norms[s], norms[s])) for s in surfaces]
-            return mentions.sparkSession.createDataFrame(
-                rows, "surface string, canonical_id string"
-            )
+    pdf = small_frame(raw, _DRIVER_FORMS)
+    if pdf is None:
+        return _surface_canonical_mapping_distributed(raw, containment_threshold)
+    surfaces = list(pdf["surface"])
+    norms = {s: _normalize_surface_py(s) for s in surfaces}
+    forms = sorted({n for n in norms.values() if n})
+    canon = _canonical_mapping_driver_dict(forms, containment_threshold)
+    rows = [(s, canon.get(norms[s], norms[s])) for s in surfaces]
+    return mentions.sparkSession.createDataFrame(rows, "surface string, canonical_id string")
+
+
+def _surface_canonical_mapping_distributed(
+    raw: DataFrame, containment_threshold: float
+) -> DataFrame:
+    """The DataFrame plan of :func:`surface_canonical_mapping` over ``raw``,
+    the distinct non-null surfaces as one ``surface`` column."""
     raw = raw.localCheckpoint(eager=True)
-    norm_mapping = canonical_mapping(
-        raw,
-        "surface",
-        containment_threshold=containment_threshold,
-        driver_threshold=0,
+    norm_mapping = _canonical_mapping_distributed(
+        _normalized_forms(raw, "surface"), containment_threshold
     )
     with_norm = raw.withColumn("norm", normalize_surface_col(F.col("surface")))
     return with_norm.join(norm_mapping, on="norm", how="left").select(

@@ -3,15 +3,17 @@
     web pages (Iceberg/parquet: url, warc_ts, html, text, lang)
       → extract_text            (Arrow mapInPandas; byte-identical per url)
       → extract_triples         (OpenIE-style SVO, Arrow)
-      → canonical_mapping       (salted groupBy + MinHash-LSH + CC)
+      → surface_canonical_mapping (token blocking + trigram containment
+                                   + CC)
       → quad graph              (entity IRIs, provenance graph = url)
       → route_subject           (reference fragmentation semantics)
       → partitioned write       (per-fragment files, checkpoint manifest,
                                  lineage + row-count metrics per fragment)
 
-Scale notes: the only shuffles are (a) the canonicalization groupBys —
-salted, (b) the two mapping joins — AQE broadcast, (c) the final
-repartition by fragment. Extraction is embarrassingly parallel map work.
+Scale notes: the only shuffles are (a) the distinct over raw surfaces —
+map-side combined, so only distinct forms cross it, (b) the two mapping
+joins — AQE broadcast, (c) the final repartition by fragment. Extraction
+is embarrassingly parallel map work.
 Resume: fragments already present in the manifest are skipped
 (overwrite-by-partition semantics; on Iceberg this is a snapshot-commit per
 partition filter).
@@ -174,8 +176,3 @@ def _manifest_exists(spark: SparkSession, manifest_dir: str) -> bool:
         return True
     except Exception:  # noqa: BLE001
         return False
-
-
-def run_pipeline(pages: DataFrame, output_dir: str) -> dict:
-    quads = build_quads(pages)
-    return fragment_and_write(quads, output_dir)

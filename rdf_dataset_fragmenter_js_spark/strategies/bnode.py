@@ -15,98 +15,72 @@ Reference semantics (``lib/strategy/FragmentationBlankNodeBuffer.ts``):
 * bnodes that never acquire a named owner are dropped with a warning
   (:111-120).
 
-Spark design: ownership is a small transitive closure computed with an
-iterative join loop (frontier semi-join style, ``localCheckpoint`` per
-iteration to cut lineage). Chains in real RDF data are short (lists,
-reification), so the loop converges in a handful of iterations; each
-iteration is a broadcast-friendly join because the link table is tiny
-relative to the quad table. At 100 TB the quad scan happens once — only the
-(bnode, owner) link table iterates.
+Spark design: ownership is a small transitive closure over the (key, value)
+link table of bnode-valued quads, computed to its fixpoint (no iteration
+cap: ownership only grows and is bounded by bnodes × owners). Link tables up
+to ``_DRIVER_LINKS`` rows are closed on the driver in plain Python; larger
+ones run a semi-naive frontier-join loop (``localCheckpoint`` per round to
+cut lineage) that re-joins only the link table, never the quads — at 100 TB
+the quad scan happens once. Both paths compute the same fixpoint, so they
+agree on every input.
 """
 
 from __future__ import annotations
 
-import logging
+from collections import defaultdict, deque
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from rdf_dataset_fragmenter_js_spark.functions.graph import small_frame
 from rdf_dataset_fragmenter_js_spark.quads import BLANK_NODE, NAMED_NODE
 
-logger = logging.getLogger(__name__)
-
-#: Safety bound; real chains are list-shaped and short.
-MAX_ITERATIONS = 50
+#: Largest link table closed on the driver. Measured crossover (BENCH.md
+#: "Distributed-path timings", reproducible with
+#: tools/distributed_paths_bench.py): the distributed loop costs ~3 jobs of
+#: fixed scheduling per round and only edges out the driver closure at
+#: ~300k pre-materialized links; inside the full routing query the two
+#: paths tie there (16.4 s vs 16.5 s warm), so the simpler path keeps up to
+#: 1M links.
+_DRIVER_LINKS = 1_000_000
 
 
 def _is(df_col: Column, term_type: str) -> Column:
     return df_col == term_type
 
 
-def _closure_driver(
-    b_rows, e_rows, max_iterations: int = MAX_ITERATIONS
-) -> list[tuple[str, str]]:
-    """Driver-side ownership closure (owners propagate along src→dst edges)
-    — identical semantics to the distributed loop, including the same
-    propagation-depth cap (one edge-hop per 'iteration') and warning, so a
-    >max_iterations-deep chain behaves identically on both paths."""
-    from collections import defaultdict, deque
-
+def _closure_driver(b_rows, e_rows) -> list[tuple[str, str]]:
+    """Driver-side ownership closure: owners propagate along src→dst edges
+    until no bnode gains an owner — the fixpoint
+    :func:`_bnode_owners_distributed` also reaches."""
     own: dict[str, set] = defaultdict(set)
     for b, o in b_rows:
         own[b].add(o)
     adj: dict[str, list] = defaultdict(list)
     for s, d in e_rows:
         adj[s].append(d)
-    queue = deque((b, 0) for b in list(own.keys()))
-    capped = False
+    queue = deque(own)
     while queue:
-        b, depth = queue.popleft()
-        if depth >= max_iterations:
-            capped = True
-            continue
+        b = queue.popleft()
         for d in adj.get(b, ()):
             new = own[b] - own[d]
             if new:
                 own[d] |= new
-                queue.append((d, depth + 1))
-    if capped:
-        logger.warning("bnode ownership did not converge in %d iterations", max_iterations)
+                queue.append(d)
     return [(b, o) for b, owners in own.items() for o in owners]
 
 
-def bnode_owners(
-    quads: DataFrame,
-    key: str,
-    key_type: str,
-    value: str,
-    value_type: str,
-    max_iterations: int = MAX_ITERATIONS,
-    driver_threshold: int = 1_000_000,
+def _ownership_links(
+    quads: DataFrame, key: str, key_type: str, value: str, value_type: str
 ) -> DataFrame:
-    """Compute the distinct (bnode, owner) ownership table.
-
-    ``key``/``value`` are quad column names (e.g. ``"s"``/``"o"`` for the
-    subject strategy). Returns DataFrame[bnode: string, owner: string].
-
-    Two physical strategies (same split as ``near_dup_clusters`` /
-    ``canonical_mapping``): link tables ≤ ``driver_threshold`` rows are
-    collected and closed on the driver in plain Python — the distributed
-    loop costs ~3 jobs of fixed scheduling per iteration, which dwarfs the
-    BFS on small link sets. Above the threshold, the iterative
-    frontier-join loop runs (the 100 TB path: only the link table iterates,
-    never the quads). Measured crossover (BENCH.md "Distributed-path
-    timings"): on pre-materialized link tables the distributed loop edges
-    out the driver BFS at ~300k links, but inside the full routing query
-    the two paths tie at that size (A/B, warm: 16.4 s vs 16.5 s) — the
-    1M default keeps the simpler path where it is not measurably worse."""
-    # Both link tables come out of ONE pass over the quads (they share the
-    # bnode-valued filter and differ only in the key's term type), so the
-    # quad-generation plan materializes exactly once into one checkpoint;
-    # base/edges are projections over the materialized rows, the threshold
-    # probe and driver transfer read them directly, and the distributed
-    # loop re-joins `edges` every iteration without re-deriving the quads.
-    links = (
+    """Distinct (__kt, __k, __v) = (key type, key, bnode value) of every
+    bnode-valued quad, checkpointed. A named key owns its bnode value
+    (FragmentationBlankNodeBuffer.ts:53-64); a bnode key links its value
+    into the chain (:83). Both come out of ONE pass over the quads, so the
+    quad plan runs once; the gate fetch and the distributed loop read the
+    checkpoint."""
+    return (
         quads.filter(_is(F.col(value_type), BLANK_NODE))
         .select(
             F.col(key_type).alias("__kt"),
@@ -116,41 +90,49 @@ def bnode_owners(
         .distinct()
         .localCheckpoint(eager=True)
     )
+
+
+def bnode_owners(
+    quads: DataFrame,
+    key: str,
+    key_type: str,
+    value: str,
+    value_type: str,
+) -> DataFrame:
+    """Compute the distinct (bnode, owner) ownership table.
+
+    ``key``/``value`` are quad column names (e.g. ``"s"``/``"o"`` for the
+    subject strategy). Returns DataFrame[bnode: string, owner: string].
+    Link tables of at most ``_DRIVER_LINKS`` rows come back in one Arrow
+    fetch and are closed on the driver; larger ones run
+    :func:`_bnode_owners_distributed`."""
+    links = _ownership_links(quads, key, key_type, value, value_type)
+    pdf = small_frame(links, _DRIVER_LINKS)
+    if pdf is None:
+        return _bnode_owners_distributed(links)
+    base = pdf[pdf["__kt"] == NAMED_NODE]
+    edges = pdf[pdf["__kt"] == BLANK_NODE]
+    pairs = _closure_driver(zip(base["__v"], base["__k"]), zip(edges["__k"], edges["__v"]))
+    return quads.sparkSession.createDataFrame(
+        pd.DataFrame(pairs, columns=["bnode", "owner"]), "bnode string, owner string"
+    )
+
+
+def _bnode_owners_distributed(links: DataFrame) -> DataFrame:
+    """Semi-naive frontier join over :func:`_ownership_links`: each round
+    joins only the pairs found in the previous round against the chain
+    edges and keeps the pairs not yet known; the loop stops when a round
+    finds none, after as many rounds as the deepest chain is long."""
     # Base: named key → bnode value  (FragmentationBlankNodeBuffer.ts:53-64)
-    base = links.filter(_is(F.col("__kt"), NAMED_NODE)).select(
+    owners = links.filter(_is(F.col("__kt"), NAMED_NODE)).select(
         F.col("__v").alias("bnode"), F.col("__k").alias("owner")
     )
     # Edges among buffered quads: bnode key → bnode value (chain links, :83)
     edges = links.filter(_is(F.col("__kt"), BLANK_NODE)).select(
         F.col("__k").alias("src"), F.col("__v").alias("dst")
     )
-
-    if driver_threshold:
-        # Cheap count probes first — an over-threshold table costs one
-        # count job against the checkpoint, never a multi-hundred-MB driver
-        # transfer. Under threshold: Arrow-batched toPandas both ways (and
-        # a pandas-backed createDataFrame back) — columnar batches, not
-        # py4j Row objects.
-        if base.limit(driver_threshold + 1).count() <= driver_threshold:
-            if edges.limit(driver_threshold + 1).count() <= driver_threshold:
-                import pandas as pd
-
-                b_pdf = base.toPandas()
-                e_pdf = edges.toPandas()
-                pairs = _closure_driver(
-                    list(zip(b_pdf["bnode"], b_pdf["owner"])),
-                    list(zip(e_pdf["src"], e_pdf["dst"])),
-                    max_iterations=max_iterations,
-                )
-                spark = quads.sparkSession
-                if not pairs:
-                    return spark.createDataFrame([], "bnode string, owner string")
-                out = pd.DataFrame(pairs, columns=["bnode", "owner"])
-                return spark.createDataFrame(out)
-
-    owners = base
     frontier = owners
-    for _ in range(max_iterations):
+    while True:
         grown = (
             frontier.join(edges, frontier["bnode"] == edges["src"])
             .select(F.col("dst").alias("bnode"), F.col("owner"))
@@ -159,12 +141,9 @@ def bnode_owners(
             .localCheckpoint(eager=True)
         )
         if grown.isEmpty():
-            break
+            return owners
         owners = owners.unionByName(grown).localCheckpoint(eager=True)
         frontier = grown
-    else:
-        logger.warning("bnode ownership did not converge in %d iterations", max_iterations)
-    return owners
 
 
 def route_bnode_quads(

@@ -22,12 +22,15 @@ min() aggregate before any shuffle leaves the map side.
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-logger = logging.getLogger(__name__)
+from rdf_dataset_fragmenter_js_spark.functions.graph import small_frame, union_find
+
+#: Largest near-dup pair set solved on the driver (crossover measured in
+#: BENCH.md "Distributed-path timings", reproducible with
+#: tools/distributed_paths_bench.py).
+_DRIVER_PAIRS = 1_000_000
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -267,70 +270,33 @@ def simhash16(
     )
 
 
-def near_dup_clusters(
-    pairs: DataFrame,
-    driver_threshold: int = 1_000_000,
-    max_iterations: int = 20,
-) -> DataFrame:
+def near_dup_clusters(pairs: DataFrame) -> DataFrame:
     """Connected components over near-dup pairs (doc_a, doc_b) → cluster
-    representative per doc. Returns (doc_id, cluster_id).
+    representative (the minimum doc id) per doc. Returns (doc_id, cluster_id).
 
-    Two physical strategies behind one API:
-
-    * pair set ≤ ``driver_threshold``: collect and solve with union-find on
-      the driver — a distributed iterative loop costs a fixed ~1s of job
-      scheduling per iteration, which dwarfs a million-edge union-find;
-    * larger: iterative min-label propagation with ``localCheckpoint`` per
-      iteration (the scalable path — converges in O(diameter) rounds; dedup
-      clusters are shallow).
-    """
-    # cheap row-count probe first (no data transfer when over threshold);
-    # under it, ONE Arrow toPandas transfer feeds the union-find. Callers
-    # passing an expensive un-materialized plan should persist/checkpoint it
-    # (lsh_candidate_pairs already returns a checkpointed frame).
-    n_pairs = pairs.limit(driver_threshold + 1).count()
-    if n_pairs <= driver_threshold:
-        pdf = pairs.toPandas()
-        rows = list(pdf.itertuples(index=False, name=None))
-        parent: dict = {}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        def union(a, b):
-            for v in (a, b):
-                if v not in parent:
-                    parent[v] = v
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # min label wins (matches the distributed min-propagation)
-                if rb < ra:
-                    ra, rb = rb, ra
-                parent[rb] = ra
-
-        for r in rows:
-            union(r[0], r[1])
-        labels = [(x, find(x)) for x in parent]
-        spark = pairs.sparkSession
-        schema = pairs.schema
-        t = schema[0].dataType.simpleString()
-        return spark.createDataFrame(labels, f"doc_id {t}, cluster_id {t}")
-    return _near_dup_clusters_distributed(pairs, max_iterations=max_iterations)
+    Pair sets of at most ``_DRIVER_PAIRS`` rows come back in one Arrow fetch
+    and are solved with the driver union-find — a distributed iterative loop
+    costs a fixed ~1s of job scheduling per round, which dwarfs a
+    million-edge union-find. Larger ones run
+    :func:`_near_dup_clusters_distributed`; both return the same labels.
+    Callers passing an expensive un-materialized plan should
+    persist/checkpoint it (lsh_candidate_pairs already returns a
+    checkpointed frame)."""
+    pdf = small_frame(pairs, _DRIVER_PAIRS)
+    if pdf is None:
+        return _near_dup_clusters_distributed(pairs)
+    labels = union_find(pdf.itertuples(index=False, name=None))
+    t = pairs.schema[0].dataType.simpleString()
+    return pairs.sparkSession.createDataFrame(
+        list(labels.items()), f"doc_id {t}, cluster_id {t}"
+    )
 
 
-def _near_dup_clusters_distributed(
-    pairs: DataFrame, max_iterations: int = 20
-) -> DataFrame:
-    """The scalable min-label-propagation path (used above threshold).
-
-    ``max_iterations`` bounds the label-propagation rounds; propagation
-    converges in O(cluster diameter), so a hit on the cap means a
-    pathological duplicate chain — we log it (like the bnode closure,
-    ``strategies/bnode.py``) instead of silently returning split
-    clusters. The driver union-find path is exact and has no cap."""
+def _near_dup_clusters_distributed(pairs: DataFrame) -> DataFrame:
+    """Min-label propagation: every doc starts labelled with itself and each
+    round takes the minimum label among its neighbours, until a round
+    changes no label. Labels only decrease, so the loop ends, after as many
+    rounds as the widest cluster's diameter."""
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
@@ -343,7 +309,7 @@ def _near_dup_clusters_distributed(
         .withColumn("cluster_id", F.col("doc_id"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iterations):
+    while True:
         neighbor_min = (
             sym.join(labels, sym["dst"] == labels["doc_id"])
             .groupBy("src")
@@ -359,19 +325,11 @@ def _near_dup_clusters_distributed(
             )
             .localCheckpoint(eager=True)
         )
-        changed = (
+        unchanged = (
             new_labels.join(labels.withColumnRenamed("cluster_id", "old"), on="doc_id")
             .filter(F.col("cluster_id") != F.col("old"))
             .isEmpty()
         )
         labels = new_labels
-        if changed:
-            break
-    else:
-        logger.warning(
-            "near-dup connected components did not converge in %d "
-            "iterations — returning possibly split clusters (raise "
-            "max_iterations for chains deeper than the cap)",
-            max_iterations,
-        )
-    return labels
+        if unchanged:
+            return labels

@@ -39,13 +39,10 @@ def test_near_dup_clusters_driver_vs_distributed(spark):
 
     docs = _docs(spark)
     pairs = D.lsh_candidate_pairs(docs, k=8, bands=4, shingle_size=4)
-    drv = {
-        (r.doc_id, r.cluster_id)
-        for r in D.near_dup_clusters(pairs, driver_threshold=1_000_000).collect()
-    }
+    drv = {(r.doc_id, r.cluster_id) for r in D.near_dup_clusters(pairs).collect()}
     dist = {
         (r.doc_id, r.cluster_id)
-        for r in D.near_dup_clusters(pairs, driver_threshold=0).collect()
+        for r in D._near_dup_clusters_distributed(pairs).collect()
     }
     assert drv == dist
     assert drv  # the exact-duplicate docs 1 and 4 share a cluster

@@ -1,6 +1,6 @@
 """Round-3 fixes: distributed multi-file Turtle/RDF-XML parsing with
 per-file blank-node namespacing, RDF/XML parseType='Collection' and
-single-node-root base scoping, distributed-CC convergence warning, and
+single-node-root base scoping, exact long-chain graph iterations, and
 streaming source validation/baseIRI."""
 
 from __future__ import annotations
@@ -182,29 +182,45 @@ def test_rdfxml_single_node_root_base_applies_once():
     ]
 
 
-# -- distributed CC convergence warning ------------------------------------
+# -- long chains: driver path == distributed path == exact fixpoint -------
 
 
-def test_near_dup_clusters_nonconvergence_warns(spark, caplog):
-    import logging
-
-    from rdf_dataset_fragmenter_js_spark.textops.dedup import near_dup_clusters
-
-    # chain 0-1-2-...-9: min-label propagation moves the min one hop/round
-    pairs = spark.createDataFrame(
-        [(f"d{i}", f"d{i + 1}") for i in range(9)], "doc_a string, doc_b string"
+def test_long_chains_exact_on_both_paths(spark):
+    """Graph iterations run to their fixpoint on both physical paths: a
+    61-node near-dup chain is ONE cluster, and every bnode of a 60-deep
+    ownership chain is owned by its named root."""
+    from rdf_dataset_fragmenter_js_spark.quads import quad, quads_df
+    from rdf_dataset_fragmenter_js_spark.strategies.bnode import (
+        _bnode_owners_distributed,
+        _ownership_links,
+        bnode_owners,
     )
-    with caplog.at_level(logging.WARNING, logger="rdf_dataset_fragmenter_js_spark.textops.dedup"):
-        split = near_dup_clusters(pairs, driver_threshold=0, max_iterations=2)
-        n_clusters_capped = split.select("cluster_id").distinct().count()
-    assert any("did not converge" in r.message for r in caplog.records)
-    assert n_clusters_capped > 1  # documented behavior: split clusters
+    from rdf_dataset_fragmenter_js_spark.textops.dedup import (
+        _near_dup_clusters_distributed,
+        near_dup_clusters,
+    )
 
-    caplog.clear()
-    with caplog.at_level(logging.WARNING, logger="rdf_dataset_fragmenter_js_spark.textops.dedup"):
-        full = near_dup_clusters(pairs, driver_threshold=0, max_iterations=20)
-    assert not any("did not converge" in r.message for r in caplog.records)
-    assert full.select("cluster_id").distinct().count() == 1
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(60)], "doc_a long, doc_b long"
+    )
+    exact_clusters = {(i, 0) for i in range(61)}
+    assert {tuple(r) for r in near_dup_clusters(pairs).collect()} == exact_clusters
+    assert {
+        tuple(r) for r in _near_dup_clusters_distributed(pairs).collect()
+    } == exact_clusters
+
+    root = E + "root"
+    chain = [quad(root, E + "p", "b0", o_type="BlankNode")] + [
+        quad(f"b{i}", E + "p", f"b{i + 1}", s_type="BlankNode", o_type="BlankNode")
+        for i in range(59)
+    ]
+    quads = quads_df(spark, chain)
+    exact_owners = {(f"b{i}", root) for i in range(60)}
+    args = (quads, "s", "s_type", "o", "o_type")
+    assert {tuple(r) for r in bnode_owners(*args).collect()} == exact_owners
+    assert {
+        tuple(r) for r in _bnode_owners_distributed(_ownership_links(*args)).collect()
+    } == exact_owners
 
 
 # -- streaming source validation + baseIRI ---------------------------------

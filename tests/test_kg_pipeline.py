@@ -12,6 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from rdf_dataset_fragmenter_js_spark.kg.canonicalize import (
+    _canonical_mapping_distributed,
+    _normalized_forms,
     apply_canonicalization,
     canonical_mapping,
     normalize_surface_col,
@@ -105,13 +107,12 @@ def test_canonicalization_driver_and_distributed_paths_agree(spark):
         ("Emma Brown",), ("E. Brown",), ("Umbrella Co",), ("Umbrella Company",),
     ]
     mentions = spark.createDataFrame(rows, ["surface"])
-    via_driver = {
-        (r.norm, r.canonical_id)
-        for r in canonical_mapping(mentions, driver_threshold=100_000).collect()
-    }
+    via_driver = {(r.norm, r.canonical_id) for r in canonical_mapping(mentions).collect()}
     via_cluster = {
         (r.norm, r.canonical_id)
-        for r in canonical_mapping(mentions, driver_threshold=0).collect()
+        for r in _canonical_mapping_distributed(
+            _normalized_forms(mentions, "surface"), 0.7
+        ).collect()
     }
     assert via_driver == via_cluster
 

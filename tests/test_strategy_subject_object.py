@@ -152,7 +152,11 @@ def test_object_strategy_bnode_owned_by_object(spark):
 def test_bnode_owners_driver_and_distributed_agree(spark):
     """Both physical strategies of the ownership closure produce the same
     (bnode, owner) table on chains and multi-owner graphs."""
-    from rdf_dataset_fragmenter_js_spark.strategies.bnode import bnode_owners
+    from rdf_dataset_fragmenter_js_spark.strategies.bnode import (
+        _bnode_owners_distributed,
+        _ownership_links,
+        bnode_owners,
+    )
 
     quads = quads_df(
         spark,
@@ -170,8 +174,8 @@ def test_bnode_owners_driver_and_distributed_agree(spark):
     }
     via_cluster = {
         (r.bnode, r.owner)
-        for r in bnode_owners(
-            quads, "s", "s_type", "o", "o_type", driver_threshold=0
+        for r in _bnode_owners_distributed(
+            _ownership_links(quads, "s", "s_type", "o", "o_type")
         ).collect()
     }
     assert via_driver == via_cluster

@@ -267,7 +267,7 @@ def test_redact_pii_patterns(spark):
             (0, "mail a.b+c@sub.example.org and d@e.io now"),
             (1, "hosts 10.0.0.1 and 192.168.255.3, call +44-207-946-0958"),
             (2, "clean text with no pii at all"),
-            (3, "v1.2.3.4 is a version-ish string"),  # \b makes it match
+            (3, "v1.2.3.4 is a version-ish string"),  # no \b between v and 1: not an IP
             (4, "+1-555-123-4567 +999-111-222-3333"),
         ],
         "doc_id long, text string",

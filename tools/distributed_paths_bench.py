@@ -1,10 +1,13 @@
 """Force-run the distributed physical strategies at bench scale.
 
-Three operators keep a driver fast path below a row threshold with a
+Three operators keep a driver fast path up to a row limit with a
 distributed loop above it (`near_dup_clusters`, `surface_canonical_mapping`
-/ `canonical_mapping`, `bnode_owners`). Small-scale equality tests exist in
-tests/; this script publishes TIMINGS for the distributed paths at bench
-scale (VERDICT r1 #7) and re-asserts result equality on the same inputs.
+/ `canonical_mapping`, `bnode_owners`; the limits are the private
+`_DRIVER_*` constants, the gate is `functions/graph.py:small_frame`).
+Small-scale equality tests exist in tests/; this script times the public
+function (driver path, every input here is under its limit) against the
+private `_*_distributed` function on the same bench-scale input, and
+re-asserts result equality — the measurements behind the three limits.
 
 Prints one JSON line; numbers are copied into BENCH.md.
 
@@ -41,10 +44,15 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
 
     from rdf_dataset_fragmenter_js_spark.kg.canonicalize import (
+        _surface_canonical_mapping_distributed,
         surface_canonical_mapping,
     )
     from rdf_dataset_fragmenter_js_spark.plans import testdata as TD
-    from rdf_dataset_fragmenter_js_spark.strategies.bnode import bnode_owners
+    from rdf_dataset_fragmenter_js_spark.strategies.bnode import (
+        _bnode_owners_distributed,
+        _ownership_links,
+        bnode_owners,
+    )
     from rdf_dataset_fragmenter_js_spark.textops import dedup as D
 
     results: dict = {"sf_dir": sf_dir, "cpus": cpus}
@@ -53,7 +61,9 @@ def main():
     quads = TD.bnode_quads(spark, sf_dir).localCheckpoint(eager=True)
     args = (quads, "s", "s_type", "o", "o_type")
     drv_sec, drv = timed(lambda: bnode_owners(*args).toPandas())
-    dist_sec, dist = timed(lambda: bnode_owners(*args, driver_threshold=0).toPandas())
+    dist_sec, dist = timed(
+        lambda: _bnode_owners_distributed(_ownership_links(*args)).toPandas()
+    )
     a = set(map(tuple, drv.itertuples(index=False, name=None)))
     b = set(map(tuple, dist.itertuples(index=False, name=None)))
     assert a == b, f"bnode_owners paths disagree: {len(a)} vs {len(b)}"
@@ -70,7 +80,7 @@ def main():
     pairs = D.lsh_candidate_pairs(docs, k=8, bands=4, shingle_size=8)
     drv_sec, drv = timed(lambda: D.near_dup_clusters(pairs).toPandas())
     dist_sec, dist = timed(
-        lambda: D.near_dup_clusters(pairs, driver_threshold=0).toPandas()
+        lambda: D._near_dup_clusters_distributed(pairs).toPandas()
     )
     a = set(map(tuple, drv.itertuples(index=False, name=None)))
     b = set(map(tuple, dist.itertuples(index=False, name=None)))
@@ -83,12 +93,11 @@ def main():
         "equal": True,
     }
 
-    # ---- canonical mapping over an above-threshold vocabulary ------------
-    # 150k distinct surfaces (> the 100k driver threshold) with clusterable
-    # alias variants — the real-corpus vocabulary shape, synthesized so the
-    # distributed blocking/containment/CC path is exercised at a size the
-    # driver path can also still run for the equality check.
-    n_base = 50_000
+    # ---- canonical mapping at the driver limit ----------------------------
+    # 99,999 distinct surfaces (just under the 100k `_DRIVER_FORMS` limit)
+    # with clusterable alias variants — the real-corpus vocabulary shape,
+    # synthesized so both paths run at the top of the driver path's range.
+    n_base = 33_333
     mentions = (
         spark.range(3 * n_base)
         .select(
@@ -108,10 +117,12 @@ def main():
         .localCheckpoint(eager=True)
     )
     drv_sec, drv = timed(
-        lambda: surface_canonical_mapping(mentions, driver_threshold=1_000_000).toPandas()
+        lambda: surface_canonical_mapping(mentions).toPandas()
     )
     dist_sec, dist = timed(
-        lambda: surface_canonical_mapping(mentions, driver_threshold=0).toPandas()
+        lambda: _surface_canonical_mapping_distributed(
+            mentions.distinct(), 0.7
+        ).toPandas()
     )
     a = dict(zip(drv["surface"], drv["canonical_id"]))
     b = dict(zip(dist["surface"], dist["canonical_id"]))
