@@ -336,7 +336,8 @@ def q_source_jsonld_roundtrip(spark, sf_dir):
 def q_source_turtle_multifile(spark, sf_dir):
     """Distributed multi-file parse e2e: the order quads split across 8
     .ttl files (N-Triples lines are valid Turtle), read back through the
-    executor-side wholeTextFiles path (sources/driverfile.py) — the gate
+    shared per-file reader's executor path (``binaryFiles`` + the
+    source-format table's Turtle parser, sources/driverfile.py) — the gate
     exercises the parallel parse, per-file base handling, and file-major
     seq reassembly, not just the single-file driver path."""
     import os
@@ -356,6 +357,41 @@ def q_source_turtle_multifile(spark, sf_dir):
     for i in range(n_files):
         with open(os.path.join(tmp, f"part{i}.ttl"), "w") as f:
             f.write("\n".join(lines[i::n_files]) + "\n")
+    return read_rdf(spark, tmp).select(
+        "s_type", "s", "p", "o_type", "o", "o_datatype", "o_lang"
+    )
+
+
+def q_source_rdfxml_roundtrip(spark, sf_dir):
+    """RDF/XML source e2e: the order quads written as one rdf:Description
+    per quad across 4 .rdf files, read back through read_rdf's extension
+    dispatch on the shared per-file reader's executor path (``binaryFiles``
+    + sources/rdfxml.py) — drives the RDF/XML parser on the distributed
+    multi-file path, compared against the same quads built by the oracle."""
+    import os
+    import tempfile
+    from xml.sax.saxutils import escape, quoteattr
+
+    from rdf_dataset_fragmenter_js_spark.sources.nquads import read_rdf
+
+    rdf_ns = RDF_TYPE.rsplit("#", 1)[0] + "#"
+
+    def description(r):
+        tag = ("rdf:" if r.p.startswith(rdf_ns) else "v:") + r.p.rsplit("#", 1)[1]
+        if r.o_type == "Literal":
+            prop = f"<{tag}>{escape(r.o)}</{tag}>"
+        else:
+            prop = f"<{tag} rdf:resource={quoteattr(r.o)}/>"
+        return f"<rdf:Description rdf:about={quoteattr(r.s)}>{prop}</rdf:Description>"
+
+    rows = TD.order_quads(spark, sf_dir).select("s", "p", "o_type", "o").collect()
+    tmp = tempfile.mkdtemp(prefix="rdfxml_rt_")
+    n_files = 4
+    for i in range(n_files):
+        with open(os.path.join(tmp, f"part{i}.rdf"), "w") as f:
+            f.write(f'<rdf:RDF xmlns:rdf="{rdf_ns}" xmlns:v="{VOCAB}">\n')
+            f.write("\n".join(description(r) for r in rows[i::n_files]))
+            f.write("\n</rdf:RDF>\n")
     return read_rdf(spark, tmp).select(
         "s_type", "s", "p", "o_type", "o", "o_datatype", "o_lang"
     )
@@ -1062,6 +1098,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "source_nquads_roundtrip": q_source_nquads_roundtrip,
         "source_jsonld_roundtrip": q_source_jsonld_roundtrip,
         "source_turtle_multifile": q_source_turtle_multifile,
+        "source_rdfxml_roundtrip": q_source_rdfxml_roundtrip,
         "source_trig_roundtrip": q_source_trig_roundtrip,
         "source_rdfa_roundtrip": q_source_rdfa_roundtrip,
         "source_html_islands": q_source_html_islands,
@@ -1885,6 +1922,10 @@ def oracle_sql() -> dict[str, str]:
             SELECT s_type, s, p, o_type, o, o_datatype, o_lang FROM quads
         """,
         "source_turtle_multifile": f"""
+            WITH quads AS ({_ORDER_QUADS})
+            SELECT s_type, s, p, o_type, o, o_datatype, o_lang FROM quads
+        """,
+        "source_rdfxml_roundtrip": f"""
             WITH quads AS ({_ORDER_QUADS})
             SELECT s_type, s, p, o_type, o, o_datatype, o_lang FROM quads
         """,

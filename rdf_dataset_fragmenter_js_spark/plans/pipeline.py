@@ -35,7 +35,11 @@ from rdf_dataset_fragmenter_js_spark.sinks.paths import (
     write_fragment_nquads,
     write_fragments,
 )
-from rdf_dataset_fragmenter_js_spark.sources.nquads import composite_source, read_rdf
+from rdf_dataset_fragmenter_js_spark.sources.nquads import (
+    composite_source,
+    read_format,
+    read_rdf,
+)
 from rdf_dataset_fragmenter_js_spark.strategies import (
     route_composite,
     route_constant,
@@ -209,26 +213,14 @@ def build_strategy(spec: dict[str, Any]):
 def build_source(spark: SparkSession, spec: dict[str, Any]) -> DataFrame:
     t = spec["@type"]
     if t == "QuadSourceFile":
-        # extension-dispatched (.nt/.nq vectorized, .ttl driver-parsed) with
-        # the optional baseIRI resolve (QuadSourceFile.ts:12,19-25,35-37).
-        # "format": "microdata" overrides the dispatch for .html (which
-        # otherwise routes to the RDFa parser, rdf-parse's primary route).
+        # extension-dispatched (.nt/.nq vectorized, other kinds per-file
+        # parsed) with the optional baseIRI resolve
+        # (QuadSourceFile.ts:12,19-25,35-37). "format" pins any kind of the
+        # source-format table — e.g. "microdata" for .html, which otherwise
+        # routes to the RDFa parser (rdf-parse's primary route).
         fmt = spec.get("format")
-        if fmt == "microdata":
-            from rdf_dataset_fragmenter_js_spark.sources.microdata import (
-                read_microdata,
-            )
-
-            return read_microdata(
-                spark, spec["filePath"], base_iri=spec.get("baseIRI")
-            )
         if fmt is not None:
-            # an explicit-but-unknown format must NOT silently fall back to
-            # extension dispatch (a typo would route .html through RDFa)
-            raise ValueError(
-                f"QuadSourceFile format {fmt!r} is not a recognized override "
-                "— omit it for extension dispatch, or use 'microdata'"
-            )
+            return read_format(spark, spec["filePath"], fmt, base_iri=spec.get("baseIRI"))
         return read_rdf(spark, spec["filePath"], base_iri=spec.get("baseIRI"))
     if t == "QuadSourceComposite":
         return composite_source([build_source(spark, s) for s in spec["sources"]])

@@ -53,6 +53,14 @@ evidenced by the in-repo spec reader :func:`read_hdt` (every CRC checked,
 structure validated) plus hypothesis round-trip fuzzing — cross-validation
 against hdt-cpp itself is documented as not run in this environment.
 
+Read-back (beyond the reference, whose rdf-parse has no HDT parser):
+``.hdt`` is a kind of the source-format table, so ``read_rdf`` and the
+streaming runner read HDT through the shared per-file reader
+(sources/driverfile.py: ``open(path, "rb")`` for one local file,
+``sc.binaryFiles`` otherwise) with :func:`parse_hdt` — the same dense
+file-major ``seq`` and per-file ``f{i}_`` blank-node namespace as every
+other format.
+
 ``generateIndexes`` (reference default ``True`` → ``rdf2hdt -i`` emits a
 ``.hdt.index.v1-1`` sidecar) is accepted but a no-op here: the sidecar is a
 query-side cache outside the exchange format, and the rdfhdt libraries
@@ -519,6 +527,15 @@ def read_hdt(data: bytes) -> list[tuple]:
     return rows
 
 
+def parse_hdt(data: bytes, base_iri: str | None = None) -> list[tuple]:
+    """One ``.hdt`` file → quad tuples: the ``hdt`` parser of the
+    source-format table (sources/nquads.py), so ``.hdt`` inputs read back
+    through the shared per-file reader like every other format. ``g`` is
+    null (HDT is a triple format); ``seq`` follows the file's SPO order;
+    ``base_iri`` is unused (HDT dictionaries hold absolute terms)."""
+    return [(*row, None, seq) for seq, row in enumerate(read_hdt(data))]
+
+
 # --------------------------------------------------------------------------
 # Spark integration
 # --------------------------------------------------------------------------
@@ -620,93 +637,19 @@ def write_fragment_hdt(
     )
 
 
-def read_hdt_files(spark, path, base_iri: str | None = None) -> DataFrame:
-    """``.hdt`` files → quad DataFrame (``QuadSourceFile`` dispatch target
-    for the ``.hdt`` extension). Beyond-reference capability: the
-    reference's rdf-parse has no HDT reader, so it can WRITE HDT (via
-    docker) but never read it back — this engine round-trips its own sink
-    output.
-
-    Distribution mirrors ``sources/driverfile.py::_read_distributed`` with
-    ``sc.binaryFiles`` instead of ``wholeTextFiles`` (HDT is binary): one
-    record per file, parsed on executors, dense file-major ``seq`` (HDT
-    triple order is the sorted SPO order, so seq is deterministic). The
-    graph column is null — HDT is a triple format. ``base_iri`` is accepted
-    for signature parity and unused (HDT dictionaries hold absolute terms).
-    """
-    from rdf_dataset_fragmenter_js_spark.quads import QUAD_SCHEMA
-    from rdf_dataset_fragmenter_js_spark.sources.driverfile import (
-        _path_key,
-        _strip_file_scheme,
-        expand_paths,
-    )
-
-    files = expand_paths(path, (".hdt",), spark)
-    bad = [f for f in files if "," in f]
-    if bad:
-        raise ValueError(
-            f"hdt: file paths containing ',' are not readable via "
-            f"binaryFiles (Spark splits its path argument on commas): {bad!r}"
-        )
-    sc = spark.sparkContext
-    index_of = {_path_key(f): i for i, f in enumerate(files)}
-    n_files = len(files)
-    bc = sc.broadcast(index_of)
-
-    def parse_record(rec):
-        uri, blob = rec
-        idx = bc.value.get(_path_key(_strip_file_scheme(uri)))
-        if idx is None:
-            raise ValueError(f"hdt: binaryFiles returned unexpected path {uri!r}")
-        rows = read_hdt(bytes(blob))
-        return [
-            (idx, s_type, s, p, o_type, o, dt, lang, None, seq)
-            for seq, (s_type, s, p, o_type, o, dt, lang) in enumerate(rows)
-        ]
-
-    rdd = sc.binaryFiles(
-        ",".join(files), minPartitions=min(n_files, sc.defaultParallelism)
-    ).flatMap(parse_record)
-    parsed = spark.createDataFrame(
-        rdd,
-        "file_idx int, "
-        + ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in QUAD_SCHEMA),
-    ).localCheckpoint(eager=True)  # parse exactly once (offsets pass + projection)
-    counts = {
-        r["file_idx"]: r["cnt"]
-        for r in parsed.groupBy("file_idx").agg(F.count("*").alias("cnt")).collect()
-    }
-    offsets, running = {}, 0
-    for i in range(n_files):
-        offsets[i] = running
-        running += counts.get(i, 0)
-    offset_map = F.create_map(
-        *[F.lit(x) for i in range(n_files) for x in (i, offsets[i])]
-    )
-    return parsed.select(
-        "s_type",
-        "s",
-        "p",
-        "o_type",
-        "o",
-        "o_datatype",
-        "o_lang",
-        "g",
-        (F.col("seq") + offset_map[F.col("file_idx")]).cast("long").alias("seq"),
-    )
-
-
 def read_hdt_fragments(spark, output_dir: str) -> DataFrame:
     """Distributed read-back of every ``.hdt`` under ``output_dir`` →
     quad-model rows + the fragment's relative ``path`` (spec-reader twin of
     :func:`write_fragment_hdt`, used by tests and the oracle gate)."""
     import pandas as pd
 
+    from rdf_dataset_fragmenter_js_spark.sources.nquads import SOURCE_FORMATS
+
     paths = [
         os.path.relpath(os.path.join(root, name), output_dir)
         for root, _dirs, names in os.walk(output_dir)
         for name in names
-        if name.endswith(".hdt")
+        if name.endswith(SOURCE_FORMATS["hdt"].extensions)
     ]
     schema = (
         "path string, s_type string, s string, p string, "

@@ -172,8 +172,9 @@ def _check_local_master(df: DataFrame, what: str) -> None:
             f"the local filesystem; master={master!r} is not local, so "
             "outputs would land on executor-local disks. Use "
             "write_fragments (partitioned parquet via the cluster "
-            "filesystem) for non-local deployments, or run the text "
-            "layout on a shared/NFS filesystem only."
+            "filesystem; outputFormat='parquet' in a spec) for non-local "
+            "deployments, or run the text layout on a shared/NFS "
+            "filesystem only."
         )
 
 
@@ -306,13 +307,7 @@ def append_fragment_nquads(routed_with_path: DataFrame, output_dir: str) -> Data
 
     from rdf_dataset_fragmenter_js_spark.sources.nquads import serialize_nquads
 
-    master = routed_with_path.sparkSession.conf.get("spark.master", "")
-    if master and not master.startswith("local"):
-        raise NotImplementedError(
-            "append_fragment_nquads appends per-fragment files via the local "
-            f"filesystem; master={master!r} is not local — use the parquet "
-            "sink (outputFormat='parquet') for non-local deployments"
-        )
+    _check_local_master(routed_with_path, "append_fragment_nquads")
 
     lines = serialize_nquads(routed_with_path).select("path", "line")
 

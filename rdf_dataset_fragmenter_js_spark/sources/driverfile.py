@@ -1,18 +1,23 @@
-"""Shared tail for the non-splittable RDF formats (Turtle, RDF/XML,
-JSON-LD): glob/dir expansion, driver parse for a single file, and a
-DISTRIBUTED per-file parse for globs/directories.
+"""The one per-file reader: every serialization that is not read as
+N-Quads lines (Turtle, TriG, N3, RDF/XML, JSON-LD, RDFa, Microdata, HDT —
+the per-file kinds of ``SOURCE_FORMATS`` in sources/nquads.py) goes
+through it, in batch, in streaming micro-batches and for HDT read-back.
 
 A single Turtle/RDF-XML document cannot be split mid-file (prefix state,
 nested elements), but a *set* of files is embarrassingly parallel: each
 file is independently parseable. So:
 
-* one matched file → parse on the driver (a config-sized ontology; no
-  cluster round-trip for a 40 kB vocabulary);
-* many matched files → ship file contents to executors via
-  ``wholeTextFiles`` (Hadoop FS API — works for local paths, HDFS, s3a)
-  and flatMap the same pure ``parse_fn`` over them, so parse wall-time
-  drops with parallelism instead of serializing through one driver
-  process.
+* one matched local file → read with ``open(path, "rb")`` and parse on the
+  driver (a config-sized ontology; no cluster round-trip for a 40 kB
+  vocabulary);
+* many matched files (or a remote one) → ship file bytes to executors via
+  ``sc.binaryFiles`` (Hadoop FS API — works for local paths, HDFS, s3a)
+  and flatMap the same pure parse over them, so parse wall-time drops
+  with parallelism instead of serializing through one driver process.
+
+Both paths hand the parser the same bytes; ``SourceFormat.parse`` decodes
+text formats in one place (strict UTF-8, newlines kept as written), so a
+file reads the same alone and in a glob.
 
 Blank-node scoping: labels are DOCUMENT-scoped in RDF, so the multi-file
 path namespaces every blank-node label (generated or document-authored)
@@ -34,6 +39,7 @@ import logging
 import os
 import re
 from collections.abc import Callable
+from functools import partial
 
 logger = logging.getLogger(__name__)
 
@@ -86,7 +92,7 @@ def expand_paths(
 
 def _expand_hadoop(spark, path: str, extensions: tuple[str, ...]) -> list[str]:
     """Glob/list a scheme-qualified path through Hadoop's FileSystem (the
-    same machinery ``wholeTextFiles`` uses to read it afterwards)."""
+    same machinery ``binaryFiles`` uses to read it afterwards)."""
     sc = spark.sparkContext
     jvm_path = sc._jvm.org.apache.hadoop.fs.Path
     conf = sc._jsc.hadoopConfiguration()
@@ -103,7 +109,7 @@ def _expand_hadoop(spark, path: str, extensions: tuple[str, ...]) -> list[str]:
         ]
     else:
         # qualify like the FileSystem itself does (default port, canonical
-        # authority) — wholeTextFiles returns qualified URIs, and index_of
+        # authority) — binaryFiles returns qualified URIs, and index_of
         # must key on the same form or every row misses the file map
         files = [str(fs.makeQualified(p))]
     files.sort()
@@ -113,21 +119,21 @@ def _expand_hadoop(spark, path: str, extensions: tuple[str, ...]) -> list[str]:
 
 
 def _parse_file_rows(
-    text: str,
+    data: bytes,
     base_iri: str | None,
     file_path: str,
-    parse_fn: Callable[[str, str], list[tuple]],
+    parse_fn: Callable[[bytes, str], list[tuple]],
     bnode_prefix: str | None,
 ) -> list[tuple]:
-    """Parse one document → quad tuples (seq local to the file), with all
-    blank-node labels namespaced by ``bnode_prefix`` when given."""
+    """Parse one file's bytes → quad tuples (seq local to the file), with
+    all blank-node labels namespaced by ``bnode_prefix`` when given."""
     if base_iri is not None:
         base = base_iri
     elif _REMOTE_SCHEME.match(file_path):
         base = file_path  # already a URI (hdfs://, s3a://, …)
     else:
         base = "file://" + os.path.abspath(file_path)
-    rows = parse_fn(text, base)
+    rows = parse_fn(data, base)
     if bnode_prefix is None:
         return rows
     out = []
@@ -145,7 +151,7 @@ def _parse_file_rows(
 
 
 def _strip_file_scheme(uri: str) -> str:
-    """``wholeTextFiles`` keys are Hadoop URIs (``file:/abs/path``); map
+    """``binaryFiles`` keys are Hadoop URIs (``file:/abs/path``); map
     back to a plain path for local files, pass others through."""
     if uri.startswith("file:"):
         uri = uri[len("file:") :]
@@ -160,7 +166,7 @@ _FILE_URI = re.compile(r"^file:(//[^/]*)?(/.*)$", re.IGNORECASE)
 def local_path_of_file_uri(path_or_uri: str) -> str | None:
     """``file:/p`` / ``file:///p`` / ``file://host/p`` → ``/p``; ``None``
     when the input is not a file: URI of that shape. The single home of
-    the file-URI→local-path collapse (sources match wholeTextFiles keys
+    the file-URI→local-path collapse (sources match binaryFiles keys
     with it, the CSV sink locates its merge directory with it)."""
     m = _FILE_URI.match(path_or_uri)
     return m.group(2) if m else None
@@ -168,7 +174,7 @@ def local_path_of_file_uri(path_or_uri: str) -> str | None:
 
 def _path_key(path_or_uri: str) -> str:
     """Normalize a path for matching the enumerated file list against
-    ``wholeTextFiles`` keys. Only the ``file:`` scheme's authority-less vs
+    ``binaryFiles`` keys. Only the ``file:`` scheme's authority-less vs
     authority forms collapse to the plain local path; any other scheme
     keeps ``scheme://authority`` — two equal paths on DIFFERENT remote
     filesystems/authorities must stay distinct keys (else rows get the
@@ -182,20 +188,19 @@ def _path_key(path_or_uri: str) -> str:
 
 
 def read_driver_parsed(
-    spark,
-    path: str,
-    extensions: tuple[str, ...],
-    base_iri: str | None,
-    parse_fn: Callable[[str, str], list[tuple]],
-    format_name: str,
+    spark, path: str | list[str], kind: str, base_iri: str | None, **options
 ):
-    """Read + parse the matched files (``parse_fn(text, base_iri) -> quad
-    tuples``). One file: driver-parsed. Several: distributed per-file parse
-    on executors. ``base_iri`` defaults per file to its file URI, like
-    rdf-parse's ``path`` option."""
+    """Read + parse the files ``path`` matches as the per-file ``kind`` of
+    ``SOURCE_FORMATS``. One local file: driver-parsed. Several (or a
+    remote one): distributed per-file parse on executors. ``base_iri``
+    defaults per file to its file URI, like rdf-parse's ``path`` option;
+    ``options`` go to the parser (JSON-LD's ``contexts``)."""
     from rdf_dataset_fragmenter_js_spark.quads import QUAD_SCHEMA
+    from rdf_dataset_fragmenter_js_spark.sources.nquads import SOURCE_FORMATS
 
-    files = expand_paths(path, extensions, spark=spark)
+    fmt = SOURCE_FORMATS[kind]
+    parse_fn = partial(fmt.parse, **options)
+    files = expand_paths(path, fmt.extensions, spark=spark)
     for file_path in files:
         try:
             size = os.path.getsize(file_path)
@@ -208,21 +213,21 @@ def read_driver_parsed(
             logger.warning(
                 "%s: %s is %d MB and parses whole in a single %s — convert "
                 "large inputs to N-Quads for splittable, vectorized reads",
-                format_name,
+                kind,
                 file_path,
                 size >> 20,
                 "driver process" if len(files) == 1 else "executor task",
             )
     if len(files) == 1 and not _REMOTE_SCHEME.match(files[0]):
-        with open(files[0], encoding="utf-8") as f:
-            text = f.read()
-        rows = _parse_file_rows(text, base_iri, files[0], parse_fn, None)
+        with open(files[0], "rb") as f:
+            data = f.read()
+        rows = _parse_file_rows(data, base_iri, files[0], parse_fn, None)
         df = spark.createDataFrame(rows, QUAD_SCHEMA)
         target = spark.sparkContext.defaultParallelism
         if len(rows) > 10 * target:
             df = df.repartition(target)
         return df
-    return _read_distributed(spark, files, base_iri, parse_fn, format_name)
+    return _read_distributed(spark, files, base_iri, parse_fn, kind)
 
 
 def _read_distributed(spark, files, base_iri, parse_fn, format_name, bnode_salt=""):
@@ -238,11 +243,11 @@ def _read_distributed(spark, files, base_iri, parse_fn, format_name, bnode_salt=
     sc = spark.sparkContext
     bad = [f for f in files if "," in f]
     if bad:
-        # wholeTextFiles takes a comma-joined path list — a comma INSIDE a
+        # binaryFiles takes a comma-joined path list — a comma INSIDE a
         # path would be split into two bogus paths (silent wrong reads)
         raise ValueError(
             f"{format_name}: file paths containing ',' are not readable via "
-            f"wholeTextFiles (Spark splits its path argument on commas): {bad!r} "
+            f"binaryFiles (Spark splits its path argument on commas): {bad!r} "
             "— rename the files or read them individually"
         )
     index_of = {_path_key(f): i for i, f in enumerate(files)}
@@ -250,18 +255,18 @@ def _read_distributed(spark, files, base_iri, parse_fn, format_name, bnode_salt=
     bc = sc.broadcast((index_of, base_iri))
 
     def parse_record(rec):
-        uri, text = rec
+        uri, data = rec
         local_path = _strip_file_scheme(uri)
         idx_map, base = bc.value
         idx = idx_map.get(_path_key(local_path))
         if idx is None:
             raise ValueError(
-                f"{format_name}: wholeTextFiles returned unexpected path {uri!r}"
+                f"{format_name}: binaryFiles returned unexpected path {uri!r}"
             )
-        rows = _parse_file_rows(text, base, local_path, parse_fn, f"{bnode_salt}f{idx}_")
+        rows = _parse_file_rows(data, base, local_path, parse_fn, f"{bnode_salt}f{idx}_")
         return [(idx,) + r for r in rows]
 
-    rdd = sc.wholeTextFiles(
+    rdd = sc.binaryFiles(
         ",".join(files), minPartitions=min(n_files, sc.defaultParallelism)
     ).flatMap(parse_record)
     parsed = spark.createDataFrame(

@@ -725,13 +725,5 @@ def read_jsonld(
     (context URL → parsed JSON), broadcast to executors with the parse
     closure for multi-file reads."""
     from rdf_dataset_fragmenter_js_spark.sources.driverfile import read_driver_parsed
-    from rdf_dataset_fragmenter_js_spark.sources.nquads import JSONLD_EXTENSIONS
 
-    return read_driver_parsed(
-        spark,
-        path,
-        JSONLD_EXTENSIONS,
-        base_iri,
-        lambda text, base: parse_jsonld(text, base_iri=base, contexts=contexts),
-        "read_jsonld",
-    )
+    return read_driver_parsed(spark, path, "jsonld", base_iri, contexts=contexts)

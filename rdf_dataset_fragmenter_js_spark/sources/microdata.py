@@ -314,13 +314,5 @@ def read_microdata(spark, path: str, base_iri: str | None = None):
     rdf-parse's primary HTML route) — select it explicitly, or via
     ``"format": "microdata"`` on a ``QuadSourceFile`` spec."""
     from rdf_dataset_fragmenter_js_spark.sources.driverfile import read_driver_parsed
-    from rdf_dataset_fragmenter_js_spark.sources.nquads import RDFA_EXTENSIONS
 
-    return read_driver_parsed(
-        spark,
-        path,
-        RDFA_EXTENSIONS,
-        base_iri,
-        lambda text, base: parse_microdata(text, base_iri=base),
-        "read_microdata",
-    )
+    return read_driver_parsed(spark, path, "microdata", base_iri)

@@ -9,6 +9,9 @@ via per-file line numbers (order-sensitivity contract, SURVEY.md §4.3).
 
 from __future__ import annotations
 
+from importlib import import_module
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -99,25 +102,61 @@ def parse_nquads_strict(lines: DataFrame, text_col: str = "value") -> DataFrame:
     return parse_nquads_lines(checked, text_col)
 
 
-#: extensions the vectorized parser handles
-SUPPORTED_EXTENSIONS = (".nt", ".nq", ".ntriples", ".nquads")
-#: extensions the driver-side Turtle/TriG parser handles (sources/turtle.py
-#: — TriG is a syntactic superset of Turtle, same parser)
-TURTLE_EXTENSIONS = (".ttl", ".turtle", ".trig")
-#: extensions the driver-side RDF/XML parser handles (sources/rdfxml.py)
-RDFXML_EXTENSIONS = (".rdf", ".owl", ".rdfxml")
-#: extensions the JSON-LD parser handles (sources/jsonld.py; rdf-parse maps
-#: .json to application/ld+json too)
-JSONLD_EXTENSIONS = (".jsonld", ".json")
-#: Notation3 — the Turtle-compatible subset (sources/turtle.py:parse_n3;
-#: N3 logic constructs fail fast)
-N3_EXTENSIONS = (".n3",)
-#: RDFa-annotated (X)HTML (sources/rdfa.py — RDFa 1.1 Lite subset)
-RDFA_EXTENSIONS = (".html", ".xhtml", ".htm")
+class SourceFormat(NamedTuple):
+    """One row of :data:`SOURCE_FORMATS`: a serialization's file extensions
+    and its per-file parser."""
 
-#: HDT binary fragments (our own QuadSinkHdt output; the reference cannot
-#: read these back — rdf-parse has no HDT parser)
-HDT_EXTENSIONS = (".hdt",)
+    extensions: tuple[str, ...]
+    #: ``module.function`` of the per-file parser, imported on first use;
+    #: None for the vectorized, splittable line reader
+    parser: str | None
+    #: the parser takes the file's bytes rather than its text
+    binary: bool = False
+
+    def parse(self, data: bytes, base: str | None, **options) -> list[tuple]:
+        """One file's bytes -> quad tuples. Text formats decode here and
+        nowhere else: strict UTF-8 (invalid bytes raise), newlines kept as
+        written (a CRLF inside a long literal stays CRLF)."""
+        module, name = self.parser.rsplit(".", 1)
+        fn = getattr(import_module(f"rdf_dataset_fragmenter_js_spark.{module}"), name)
+        return fn(data if self.binary else data.decode("utf-8"), base, **options)
+
+
+#: kind -> extensions + parser: the one extension dispatch, read by
+#: read_rdf's sniff, the QuadSourceFile ``format`` key and the streaming
+#: runner. A sniff takes the FIRST kind listing an extension, so ``.html``
+#: reads as RDFa (rdf-parse's primary HTML route) unless ``format:
+#: "microdata"`` pins it. TriG is a syntactic superset of Turtle; N3 is its
+#: quad-projectable subset; rdf-parse maps ``.json`` to JSON-LD; HDT is our
+#: own QuadSinkHdt output, which the reference cannot read back.
+SOURCE_FORMATS: dict[str, SourceFormat] = {
+    "nquads": SourceFormat((".nt", ".nq", ".ntriples", ".nquads"), None),
+    "turtle": SourceFormat((".ttl", ".turtle", ".trig"), "sources.turtle.parse_turtle"),
+    "n3": SourceFormat((".n3",), "sources.turtle.parse_n3"),
+    "rdfxml": SourceFormat((".rdf", ".owl", ".rdfxml"), "sources.rdfxml.parse_rdfxml"),
+    "jsonld": SourceFormat((".jsonld", ".json"), "sources.jsonld.parse_jsonld"),
+    "rdfa": SourceFormat((".html", ".xhtml", ".htm"), "sources.rdfa.parse_rdfa"),
+    "microdata": SourceFormat((".html", ".xhtml", ".htm"), "sources.microdata.parse_microdata"),
+    "hdt": SourceFormat((".hdt",), "sinks.hdt.parse_hdt", binary=True),
+}
+
+
+def source_format(kind: str) -> SourceFormat:
+    """The table row for an explicit ``format`` key; unknown kinds raise
+    (a typo must not fall back to extension dispatch)."""
+    if kind not in SOURCE_FORMATS:
+        raise ValueError(
+            f"QuadSourceFile format {kind!r} is not a recognized override — "
+            f"omit it for extension dispatch, or use one of {list(SOURCE_FORMATS)}"
+        )
+    return SOURCE_FORMATS[kind]
+
+
+def _kind_of(name: str) -> str | None:
+    """The first table kind whose extensions end ``name``."""
+    n = name.lower()
+    return next((k for k, f in SOURCE_FORMATS.items() if n.endswith(f.extensions)), None)
+
 
 _SCHEME_PREFIX = r"^[A-Za-z][A-Za-z0-9+.\-]*:"
 
@@ -145,13 +184,12 @@ def read_nquads(spark: SparkSession, path: str, base_iri: str | None = None) -> 
     """``QuadSourceFile`` (``lib/io/QuadSourceFile.ts:19-25``) for .nt/.nq."""
     lowered = path.lower()
     dotted = "." in lowered.rsplit("/", 1)[-1]
-    if dotted and not lowered.endswith(SUPPORTED_EXTENSIONS) and not lowered.endswith("*"):
+    line_exts = SOURCE_FORMATS["nquads"].extensions
+    if dotted and not lowered.endswith(line_exts) and not lowered.endswith("*"):
         raise NotImplementedError(
             f"QuadSourceFile: unsupported RDF serialization for '{path}' — the "
-            f"vectorized line parser handles {SUPPORTED_EXTENSIONS}; the "
-            f"per-file parsers handle {TURTLE_EXTENSIONS}, "
-            f"{RDFXML_EXTENSIONS} and {JSONLD_EXTENSIONS} (use read_rdf "
-            "for extension dispatch)"
+            f"vectorized line parser handles {line_exts}; use read_rdf for "
+            "extension dispatch to the per-file parsers"
         )
     df = parse_nquads_lines(spark.read.text(path))
     if base_iri:
@@ -166,7 +204,7 @@ def _sniff_format(
     return_names: bool = False,
 ):
     """Classify a path (file, glob, or directory) by the extension(s) of
-    the file(s) it targets: 'nquads' | 'turtle' | 'rdfxml' | 'jsonld'.
+    the file(s) it targets: a :data:`SOURCE_FORMATS` kind.
 
     Scheme-qualified paths (hdfs://, s3a://, …) are listed through the same
     Hadoop FileSystem machinery the readers use (sources/driverfile.py) —
@@ -181,35 +219,19 @@ def _sniff_format(
     wrong guess would silently drop every later-arriving parsed-format file.
 
     ``return_names=True`` returns ``(format, names_or_None)`` where names
-    is the concrete remote file list when a Hadoop listing was performed —
-    callers pass it to the reader so object-store directories aren't listed
-    twice (a second globStatus/listStatus round-trip per read)."""
+    is the concrete remote file list when a Hadoop listing was performed
+    for a per-file kind — callers pass it to the reader so object-store
+    directories aren't listed twice (a second globStatus/listStatus
+    round-trip per read). The line reader lists through
+    ``spark.read.text`` itself, so N-Quads gets None."""
     import glob as _glob
     import os
     import re as _re
 
-    def classify(name: str) -> str | None:
-        n = name.lower()
-        if n.endswith(TURTLE_EXTENSIONS):
-            return "turtle"
-        if n.endswith(RDFXML_EXTENSIONS):
-            return "rdfxml"
-        if n.endswith(JSONLD_EXTENSIONS):
-            return "jsonld"
-        if n.endswith(N3_EXTENSIONS):
-            return "n3"
-        if n.endswith(RDFA_EXTENSIONS):
-            return "rdfa"
-        if n.endswith(HDT_EXTENSIONS):
-            return "hdt"
-        if n.endswith(SUPPORTED_EXTENSIONS):
-            return "nquads"
-        return None
-
     def done(fmt: str, names=None):
         return (fmt, names) if return_names else fmt
 
-    direct = classify(path)
+    direct = _kind_of(path)
     if direct:
         return done(direct)
     listed_remote = False
@@ -222,10 +244,7 @@ def _sniff_format(
                 "SparkSession (Hadoop FileSystem listing) — pass spark or use an "
                 "extension-qualified path"
             )
-        all_ext = (
-            TURTLE_EXTENSIONS + RDFXML_EXTENSIONS + JSONLD_EXTENSIONS
-            + N3_EXTENSIONS + RDFA_EXTENSIONS + SUPPORTED_EXTENSIONS
-        )
+        all_ext = tuple(e for f in SOURCE_FORMATS.values() for e in f.extensions)
         names = _expand_hadoop(spark, path, all_ext)  # raises on zero matches
         if names == [path]:
             return done("nquads")  # extension-less single remote file: reference default
@@ -242,55 +261,42 @@ def _sniff_format(
         if on_empty == "raise":
             raise FileNotFoundError(f"{path!r} does not exist yet")
         return done("nquads")  # extension-less single file: reference default
-    kinds = {k for k in (classify(n) for n in names) if k}
+    kinds = {k for k in map(_kind_of, names) if k}
     if len(kinds) > 1:
         raise ValueError(
             f"QuadSourceFile: {path!r} mixes RDF serializations {sorted(kinds)} — "
             "read each format separately and union with composite_source"
         )
     fmt = kinds.pop() if kinds else "nquads"
-    return done(fmt, names if listed_remote else None)
+    return done(fmt, names if listed_remote and fmt != "nquads" else None)
+
+
+def read_format(
+    spark: SparkSession, path: str | list[str], kind: str, base_iri: str | None = None
+) -> DataFrame:
+    """Read a file, glob, directory or listed file list as one
+    :data:`SOURCE_FORMATS` kind: N-Quads through the vectorized splittable
+    line parser, every other kind through the per-file reader
+    (sources/driverfile.py: the driver parses one local file, executors
+    parse globs/directories from ``binaryFiles``)."""
+    source_format(kind)
+    if kind == "nquads":
+        return read_nquads(spark, path, base_iri=base_iri)
+    from rdf_dataset_fragmenter_js_spark.sources.driverfile import read_driver_parsed
+
+    return read_driver_parsed(spark, path, kind, base_iri)
 
 
 def read_rdf(spark: SparkSession, path: str, base_iri: str | None = None) -> DataFrame:
     """``QuadSourceFile`` with format dispatch by extension (the reference
     lets rdf-parse pick the parser from the path, QuadSourceFile.ts:19-25):
-    N-Triples/N-Quads → vectorized splittable line parser; Turtle, RDF/XML
-    and JSON-LD → per-file parsers (driver for one file, distributed over
-    executors for globs/directories — sources/driverfile.py). Directory and
-    glob paths dispatch on the extensions of the files they match."""
+    the :data:`SOURCE_FORMATS` kind of the path, or of the files a glob or
+    directory matches, read by :func:`read_format`."""
     fmt, names = _sniff_format(path, spark, return_names=True)
     # when classification already paid a remote (Hadoop FS) listing, hand
     # the concrete file list to the reader — expand_paths short-circuits on
     # a list, so an object-store directory is listed exactly once per read
-    src = names if names is not None else path
-    if fmt == "turtle":
-        from rdf_dataset_fragmenter_js_spark.sources.turtle import read_turtle
-
-        return read_turtle(spark, src, base_iri=base_iri)
-    if fmt == "rdfxml":
-        from rdf_dataset_fragmenter_js_spark.sources.rdfxml import read_rdfxml
-
-        return read_rdfxml(spark, src, base_iri=base_iri)
-    if fmt == "jsonld":
-        from rdf_dataset_fragmenter_js_spark.sources.jsonld import read_jsonld
-
-        return read_jsonld(spark, src, base_iri=base_iri)
-    if fmt == "n3":
-        from rdf_dataset_fragmenter_js_spark.sources.turtle import read_n3
-
-        return read_n3(spark, src, base_iri=base_iri)
-    if fmt == "hdt":
-        from rdf_dataset_fragmenter_js_spark.sinks.hdt import read_hdt_files
-
-        return read_hdt_files(spark, src, base_iri=base_iri)
-    if fmt == "rdfa":
-        from rdf_dataset_fragmenter_js_spark.sources.rdfa import read_rdfa
-
-        return read_rdfa(spark, src, base_iri=base_iri)
-    # the vectorized line reader delegates globbing to spark.read.text —
-    # no driver-side listing to deduplicate
-    return read_nquads(spark, path, base_iri=base_iri)
+    return read_format(spark, path if names is None else names, fmt, base_iri)
 
 
 def composite_source(dfs: list[DataFrame]) -> DataFrame:

@@ -750,13 +750,5 @@ def read_rdfa(spark, path: str, base_iri: str | None = None):
     (driver for one file, distributed for globs/directories); ``base_iri``
     defaults per file to its URI like rdf-parse's ``path`` option."""
     from rdf_dataset_fragmenter_js_spark.sources.driverfile import read_driver_parsed
-    from rdf_dataset_fragmenter_js_spark.sources.nquads import RDFA_EXTENSIONS
 
-    return read_driver_parsed(
-        spark,
-        path,
-        RDFA_EXTENSIONS,
-        base_iri,
-        lambda text, base: parse_rdfa(text, base_iri=base),
-        "read_rdfa",
-    )
+    return read_driver_parsed(spark, path, "rdfa", base_iri)

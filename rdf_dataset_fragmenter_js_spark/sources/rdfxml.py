@@ -275,11 +275,4 @@ def read_rdfxml(spark, path: str, base_iri: str | None = None):
     rdf-parse's ``path`` option."""
     from rdf_dataset_fragmenter_js_spark.sources.driverfile import read_driver_parsed
 
-    return read_driver_parsed(
-        spark,
-        path,
-        (".rdf", ".owl", ".rdfxml"),
-        base_iri,
-        lambda text, base: parse_rdfxml(text, base_iri=base),
-        "read_rdfxml",
-    )
+    return read_driver_parsed(spark, path, "rdfxml", base_iri)

@@ -625,28 +625,14 @@ def read_n3(spark, path: str, base_iri: str | None = None):
     """``QuadSourceFile`` for ``.n3`` — whole-file parsed like Turtle."""
     from rdf_dataset_fragmenter_js_spark.sources.driverfile import read_driver_parsed
 
-    return read_driver_parsed(
-        spark,
-        path,
-        (".n3",),
-        base_iri,
-        lambda text, base: parse_n3(text, base_iri=base),
-        "read_n3",
-    )
+    return read_driver_parsed(spark, path, "n3", base_iri)
 
 
 def read_turtle(spark, path: str, base_iri: str | None = None):
-    """``QuadSourceFile`` for ``.ttl`` — whole-file parsed (Turtle is not
-    line-splittable): one file on the driver, globs/directories in
+    """``QuadSourceFile`` for ``.ttl``/``.trig`` — whole-file parsed (Turtle
+    is not line-splittable): one file on the driver, globs/directories in
     parallel on executors. ``base_iri`` defaults per file to its URI, like
     rdf-parse's ``path`` option."""
     from rdf_dataset_fragmenter_js_spark.sources.driverfile import read_driver_parsed
 
-    return read_driver_parsed(
-        spark,
-        path,
-        (".ttl", ".turtle", ".trig"),
-        base_iri,
-        lambda text, base: parse_turtle(text, base_iri=base),
-        "read_turtle",
-    )
+    return read_driver_parsed(spark, path, "turtle", base_iri)

@@ -25,8 +25,6 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-_NQ_EXTENSIONS = (".nt", ".nq")
-
 #: binaryFile's fixed schema (file streams require it to be explicit)
 _BINARY_FILE_SCHEMA = (
     "path string, modificationTime timestamp, length long, content binary"
@@ -34,9 +32,9 @@ _BINARY_FILE_SCHEMA = (
 
 
 def _classify_child(path: str, spark: SparkSession) -> str:
-    """Map a child source path to its streaming ingestion format:
-    'nquads' (vectorized line stream) or 'turtle'/'n3'/'rdfxml'/'jsonld'/
-    'rdfa' (per-file parse over a binaryFile stream). Delegates to the
+    """Map a child source path to its streaming ingestion format: a kind
+    of the source-format table — 'nquads' (vectorized line stream) or any
+    per-file kind (parsed over a binaryFile stream). Delegates to the
     batch sniffer — which lists remote (hdfs://, s3a://) paths through
     Hadoop's FileSystem — so a remote directory of ``.ttl`` files can
     never silently fall through to the line reader and drop every quad.
@@ -65,22 +63,15 @@ def _classify_child(path: str, spark: SparkSession) -> str:
         ) from e
 
 
-#: child-spec ``format`` values (streaming ingestion readers)
-_STREAM_FORMATS = ("nquads", "turtle", "n3", "rdfxml", "jsonld", "rdfa")
-
-
 def _child_kind(child: dict, spark: SparkSession) -> str:
     """Streaming reader for one composite child: the explicit ``format``
     key when given (lets a pre-created EMPTY landing directory stream
-    without extension-qualified globs), else sniffed from the path."""
+    without extension-qualified globs; the same kinds as the batch
+    ``format`` key), else sniffed from the path."""
     fmt = child.get("format")
     if fmt is None:
         return _classify_child(child["filePath"], spark)
-    if fmt not in _STREAM_FORMATS:
-        raise ValueError(
-            f"stream source format {fmt!r} not recognized — expected one "
-            f"of {_STREAM_FORMATS}"
-        )
+    source_format(fmt)
     return fmt
 
 from rdf_dataset_fragmenter_js_spark.plans.pipeline import (
@@ -89,8 +80,10 @@ from rdf_dataset_fragmenter_js_spark.plans.pipeline import (
 )
 from rdf_dataset_fragmenter_js_spark.sinks.paths import map_doc_to_path
 from rdf_dataset_fragmenter_js_spark.sources.nquads import (
+    SOURCE_FORMATS,
     parse_nquads_lines,
     resolve_terms_against_base,
+    source_format,
 )
 
 
@@ -106,9 +99,10 @@ def stream_pipeline_spec(
 
     ``spec`` is the same componentsjs-shaped spec as ``run_pipeline_spec``;
     the source is a ``QuadSourceFile`` (directory/glob of ``.nq``/``.nt``
-    files — streamed as vectorized lines — or of ``.ttl``/``.trig``/
-    ``.rdf``/``.jsonld`` files, streamed as file arrivals via binaryFile
-    and parsed per-file on executors like the batch read) or a
+    files — streamed as vectorized lines — or of any per-file kind of the
+    source-format table (``.ttl``, ``.rdf``, ``.jsonld``, ``.hdt``, …),
+    streamed as file arrivals via binaryFile and parsed per-file on
+    executors like the batch read) or a
     ``QuadSourceComposite`` of them (per-child ``baseIRI`` honored), and
     the sink a ``QuadSinkFile`` — ``outputFormat='parquet'`` appends
     exactly-once partitioned parquet; the default N-Quads layout appends
@@ -206,7 +200,7 @@ def stream_pipeline_spec(
             lines = part if lines is None else lines.unionByName(part)
         stream = lines
     else:
-        # mixed / parsed formats (Turtle, TriG, RDF/XML, JSON-LD): stream
+        # mixed / per-file formats (Turtle, RDF/XML, JSON-LD, HDT, …): stream
         # file ARRIVALS via binaryFile (content column pruned — only paths
         # reach the driver), then parse each batch's files on executors
         # through the same distributed per-file machinery as the batch path
@@ -215,22 +209,6 @@ def stream_pipeline_spec(
         from rdf_dataset_fragmenter_js_spark.sources.driverfile import (
             _read_distributed,
         )
-        from rdf_dataset_fragmenter_js_spark.sources.jsonld import parse_jsonld
-        from rdf_dataset_fragmenter_js_spark.sources.rdfxml import parse_rdfxml
-        from rdf_dataset_fragmenter_js_spark.sources.turtle import (
-            parse_n3,
-            parse_turtle,
-        )
-
-        from rdf_dataset_fragmenter_js_spark.sources.rdfa import parse_rdfa
-
-        parse_fns = {
-            "turtle": lambda text, base: parse_turtle(text, base_iri=base),
-            "rdfxml": lambda text, base: parse_rdfxml(text, base_iri=base),
-            "jsonld": lambda text, base: parse_jsonld(text, base_iri=base),
-            "n3": lambda text, base: parse_n3(text, base_iri=base),
-            "rdfa": lambda text, base: parse_rdfa(text, base_iri=base),
-        }
 
         def process(batch_files: DataFrame, batch_id: int) -> None:
             parts = []
@@ -252,7 +230,7 @@ def stream_pipeline_spec(
                         spark,
                         files,
                         base_iri,
-                        parse_fns[kind],
+                        SOURCE_FORMATS[kind].parse,
                         f"stream_{kind}",
                         bnode_salt=f"b{batch_id}_",
                     )

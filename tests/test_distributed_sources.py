@@ -92,6 +92,25 @@ def test_single_file_still_driver_parsed(spark, tmp_path):
     assert [(r.s_type, r.s) for r in rows] == [("BlankNode", "b_b0")]
 
 
+def test_file_reads_same_alone_and_in_glob(spark, tmp_path):
+    """The driver read of one file and the executor read of a glob hand the
+    parser the same bytes: a CRLF inside a long literal survives both ways,
+    and invalid UTF-8 raises both ways instead of becoming U+FFFD."""
+    d = tmp_path / "bytes"
+    d.mkdir()
+    (d / "a.ttl").write_bytes(b'<http://ex.org/s> <http://ex.org/p> """line1\r\nline2""" .\n')
+    (d / "b.ttl").write_bytes(b"<http://ex.org/s2> <http://ex.org/p> <http://ex.org/o> .\n")
+    alone = [r.o for r in read_rdf(spark, str(d / "a.ttl")).collect()]
+    in_glob = [r.o for r in read_rdf(spark, str(d / "*.ttl")).collect() if r.s.endswith("/s")]
+    assert alone == in_glob == ["line1\r\nline2"]
+
+    (d / "b.ttl").write_bytes(b'<http://ex.org/s2> <http://ex.org/p> "caf\xe9" .\n')
+    with pytest.raises(UnicodeDecodeError):
+        read_rdf(spark, str(d / "b.ttl"))
+    with pytest.raises(Exception, match="UnicodeDecodeError"):
+        read_rdf(spark, str(d / "*.ttl")).collect()
+
+
 # -- RDF/XML parseType=Collection + root scoping ---------------------------
 
 
@@ -322,7 +341,7 @@ def test_stream_honors_base_iri(spark, tmp_path):
 def test_remote_path_expansion(spark, tmp_path):
     """Scheme-qualified paths expand through the Hadoop FileSystem API (the
     100 TB inputs are not on the driver's local disk); path keys normalize
-    so the enumerated list matches wholeTextFiles URIs."""
+    so the enumerated list matches binaryFiles URIs."""
     from rdf_dataset_fragmenter_js_spark.sources.driverfile import (
         _expand_hadoop,
         _path_key,
@@ -453,9 +472,10 @@ def test_stream_classify_empty_dir_fails_fast(spark, tmp_path):
 
 
 def test_comma_path_rejected(spark, tmp_path):
-    """wholeTextFiles splits its path argument on commas — a comma inside a
+    """binaryFiles splits its path argument on commas — a comma inside a
     file name must fail fast, not read two bogus paths."""
     from rdf_dataset_fragmenter_js_spark.sources.driverfile import _read_distributed
+    from rdf_dataset_fragmenter_js_spark.sources.nquads import SOURCE_FORMATS
 
     d = tmp_path / "commas"
     d.mkdir()
@@ -464,7 +484,9 @@ def test_comma_path_rejected(spark, tmp_path):
     for p in (good, bad):
         p.write_text("<http://s> <http://p> <http://o> .\n")
     with pytest.raises(ValueError, match="comma|','"):
-        _read_distributed(spark, [str(good), str(bad)], None, parse_turtle, "turtle")
+        _read_distributed(
+            spark, [str(good), str(bad)], None, SOURCE_FORMATS["turtle"].parse, "turtle"
+        )
 
 
 def test_rdfxml_authored_nodeid_disjoint_from_generated():
@@ -492,9 +514,7 @@ def test_large_file_warning_fires_for_globs(tmp_path, caplog, monkeypatch, spark
         (d / name).write_text("<http://s> <http://p> <http://o> .\n")
     monkeypatch.setattr(dfmod, "LARGE_FILE_BYTES", 1)
     with caplog.at_level(logging.WARNING, logger=dfmod.logger.name):
-        dfmod.read_driver_parsed(
-            spark, str(d), (".ttl",), None, parse_turtle, "turtle"
-        ).collect()
+        dfmod.read_driver_parsed(spark, str(d), "turtle", None).collect()
     warned = [r for r in caplog.records if "executor task" in r.getMessage()]
     assert len(warned) == 2
 

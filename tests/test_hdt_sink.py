@@ -178,7 +178,7 @@ def test_write_fragment_hdt_spark(spark, tmp_path):
 def test_read_rdf_hdt_source(spark, tmp_path):
     """.hdt dispatches through the QuadSourceFile read path (beyond-reference:
     rdf-parse cannot read HDT back; our engine round-trips its own sink
-    output) with dense file-major seq."""
+    output) with dense file-major seq and file-scoped blank nodes."""
     from rdf_dataset_fragmenter_js_spark.sources.nquads import read_rdf
 
     rows = [
@@ -203,6 +203,17 @@ def test_read_rdf_hdt_source(spark, tmp_path):
         ("http://ex.org/b", "v2", None),
     ]
     assert sorted(r.seq for r in back) == [0, 1, 2]  # dense file-major
+
+    # blank-node labels are file-scoped: '_:b0' in two .hdt files stays two
+    # resources, namespaced f{i}_ like every other multi-file format
+    twins = tmp_path / "bnode_twins"
+    twins.mkdir()
+    for name in ("a.hdt", "b.hdt"):
+        (twins / name).write_bytes(
+            build_hdt([_row("BlankNode", "b0", "http://ex.org/p", "Literal", "v")])
+        )
+    back = read_rdf(spark, str(twins)).collect()
+    assert sorted(r.s for r in back) == ["f0_b0", "f1_b0"]
 
 
 def test_pipeline_spec_hdt(spark, tmp_path):

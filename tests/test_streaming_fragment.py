@@ -90,8 +90,8 @@ def test_stream_empty_dir_needs_explicit_format(spark, tmp_path):
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     with pytest.raises(ValueError, match="format"):
         stream_pipeline_spec(spark, spec, out, ckpt)
-    with pytest.raises(ValueError, match="not recognized"):
-        bad = dict(spec, quadSource=dict(spec["quadSource"], format="hdt"))
+    with pytest.raises(ValueError, match="not a recognized"):
+        bad = dict(spec, quadSource=dict(spec["quadSource"], format="xyz"))
         stream_pipeline_spec(spark, bad, out, ckpt)
 
     spec["quadSource"]["format"] = "nquads"
@@ -100,6 +100,45 @@ def test_stream_empty_dir_needs_explicit_format(spark, tmp_path):
     )
     _await(stream_pipeline_spec(spark, spec, out, ckpt))
     assert spark.read.parquet(out).count() == 1
+
+
+def test_stream_hdt_dir(spark, tmp_path):
+    """A directory of .hdt files streams through the per-file reader (the
+    same source-format table as the batch read) with every quad written."""
+    from rdf_dataset_fragmenter_js_spark.sinks.hdt import build_hdt
+    from rdf_dataset_fragmenter_js_spark.streaming.fragment import stream_pipeline_spec
+
+    src = tmp_path / "hdts"
+    src.mkdir()
+    for i in range(2):
+        (src / f"part{i}.hdt").write_bytes(
+            build_hdt(
+                [
+                    ("NamedNode", f"http://ex.org/s{i}", "http://ex.org/p",
+                     "NamedNode", f"http://ex.org/o{i}", None, None),
+                    ("NamedNode", f"http://ex.org/s{i}", "http://ex.org/q",
+                     "Literal", f"v{i}", None, None),
+                ]
+            )
+        )
+    spec = {
+        "quadSource": {"@type": "QuadSourceFile", "filePath": str(src)},
+        "fragmentationStrategy": {"@type": "FragmentationStrategySubject"},
+        "quadSink": {
+            "@type": "QuadSinkFile",
+            "outputFormat": "parquet",
+            "iriToPath": {"^http://ex\\.org/": "frags/"},
+        },
+    }
+    out = str(tmp_path / "out")
+    _await(stream_pipeline_spec(spark, spec, out, str(tmp_path / "ckpt")))
+    rows = spark.read.parquet(out).collect()
+    assert sorted((r.s, r.p, r.o, r.path) for r in rows) == [
+        ("http://ex.org/s0", "http://ex.org/p", "http://ex.org/o0", "frags/s0"),
+        ("http://ex.org/s0", "http://ex.org/q", "v0", "frags/s0"),
+        ("http://ex.org/s1", "http://ex.org/p", "http://ex.org/o1", "frags/s1"),
+        ("http://ex.org/s1", "http://ex.org/q", "v1", "frags/s1"),
+    ]
 
 
 def test_stream_composite_sources_and_nquads_sink(spark, tmp_path):
