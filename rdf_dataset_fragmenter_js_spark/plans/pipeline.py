@@ -290,15 +290,21 @@ def run_pipeline_spec(spark: SparkSession, spec: dict[str, Any] | str, output_di
     source = build_source(spark, spec["quadSource"])
     if callbacks:
         # the source feeds the transformer chain, every callback's
-        # original-value join, and the callback core-chain pass; the
-        # transformed frame feeds the sink and every callback's matcher
-        # pass — persist both layers so nothing is re-scanned per consumer
+        # original-value join and the callback core-chain pass
         source = source.persist()
     transformed = source
     for tr in spec.get("transformers", []):
         transformed = _apply_transformer(tr, transformed, None)
-    if callbacks:
-        transformed = transformed.persist()
+    # The transformed frame is read at least three times on every run: the
+    # subject/object strategies' bnode probe, their ownership-links pass and
+    # the sink write (plus every callback's matcher pass), and each read
+    # would re-parse the source and re-run the remap's UDF and mapping
+    # joins. Without callbacks the source is read only inside that one
+    # computation (by the remap's filtered scans), and persisting it as well
+    # made the SolidBench config job slower (perfbench solidbench_fragment,
+    # 4 alternating pairs on a 4-core host: median job_s 7.14 s vs 6.30 s):
+    # writing that cache costs more than re-parsing.
+    transformed = transformed.persist()
     try:
         strategy = build_strategy(spec["fragmentationStrategy"])
         run_sink(spark, strategy(transformed), spec["quadSink"], output_dir)
@@ -307,8 +313,8 @@ def run_pipeline_spec(spark: SparkSession, spec: dict[str, Any] | str, output_di
                 spark, cb, source, transformed, spec.get("transformers", [])
             )
     finally:
+        transformed.unpersist()
         if callbacks:
-            transformed.unpersist()
             source.unpersist()
 
 

@@ -5,8 +5,9 @@ written file into a ``.hdt`` binary by shelling out to a **dockerized
 rdf2hdt** (``convertSingleFile``, ``QuadSinkHdt.ts:61-98``) with a default
 ``conversionConcurrency`` of **1** (documented "really slow",
 ``README.md:322-323``). This engine instead builds the HDT binary
-**natively and distributed**: the same per-path ``applyInPandas`` shuffle
-that backs :func:`~rdf_dataset_fragmenter_js_spark.sinks.paths.write_fragment_files`
+**natively and distributed**: the same per-path shuffle and sorted-run
+``mapInArrow`` writer that backs
+:func:`~rdf_dataset_fragmenter_js_spark.sinks.paths.write_fragment_files`
 co-locates each fragment's quads on one task, and that task serializes the
 HDT file directly — every executor slot converts fragments in parallel, no
 docker, no intermediate file unless ``removeSourceFiles=False`` asks to
@@ -79,7 +80,6 @@ import zlib
 import numpy as np
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from rdf_dataset_fragmenter_js_spark.quads import BLANK_NODE, LITERAL, NAMED_NODE
 
@@ -569,12 +569,15 @@ def write_fragment_hdt(
     the reference would have kept — supported for the line formats
     (``application/n-quads`` / ``application/n-triples``), serialized in
     the same task from the pre-computed JVM-side ``line`` column so the
-    whole sink stays one shuffle. Returns DataFrame[path, n_triples]
+    whole sink stays one shuffle (the path-sorted run writer of
+    :func:`~rdf_dataset_fragmenter_js_spark.sinks.paths.write_fragment_files`).
+    Returns DataFrame[path, n_triples]
     (the writes run when it is acted on, e.g. ``.collect()``)."""
-    import pandas as pd
-
     from rdf_dataset_fragmenter_js_spark.sinks.paths import (
         _check_local_master,
+        _line_writer,
+        _open_target,
+        _write_path_runs,
         forbid_named_graphs,
     )
     from rdf_dataset_fragmenter_js_spark.sources.nquads import serialize_nquads
@@ -601,40 +604,24 @@ def write_fragment_hdt(
     if output_format == "application/n-triples":
         src = forbid_named_graphs(src)
     keep_sources = not remove_source_files
-    cols = ["path", "s_type", "s", "p", "o_type", "o", "o_datatype", "o_lang"]
+    cols = ["s_type", "s", "p", "o_type", "o", "o_datatype", "o_lang"]
     if keep_sources:
-        lines = serialize_nquads(src)
-        src = lines.select(*cols, F.col("line"))
+        src = serialize_nquads(src).select("path", *cols, "line")
     else:
-        src = src.select(*cols)
+        src = src.select("path", *cols)
     ext = file_extension
+    write_source = _line_writer(output_dir, "w")
 
-    def convert_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        rel = pdf["path"].iloc[0]
-        target = os.path.join(output_dir, hdt_path_for(rel, ext))
-        os.makedirs(os.path.dirname(target) or ".", exist_ok=True)
-        rows = zip(
-            pdf["s_type"],
-            pdf["s"],
-            pdf["p"],
-            pdf["o_type"],
-            pdf["o"],
-            (None if pd.isna(v) else v for v in pdf["o_datatype"]),
-            (None if pd.isna(v) else v for v in pdf["o_lang"]),
-        )
-        blob, n_triples = _build_hdt_counted(rows, base_uri or "file://" + rel)
-        with open(target, "wb") as f:
+    def convert(rel: str, rows) -> int:
+        quads = zip(*(rows.column(c).to_pylist() for c in cols))
+        blob, n_triples = _build_hdt_counted(quads, base_uri or "file://" + rel)
+        with _open_target(output_dir, hdt_path_for(rel, ext), "wb") as f:
             f.write(blob)
         if keep_sources:
-            source_target = os.path.join(output_dir, rel)
-            os.makedirs(os.path.dirname(source_target) or ".", exist_ok=True)
-            with open(source_target, "w") as f:
-                f.write("\n".join(pdf["line"]) + "\n")
-        return pd.DataFrame({"path": [rel], "n_triples": [n_triples]})
+            write_source(rel, rows)
+        return n_triples
 
-    return src.groupBy("path").applyInPandas(
-        convert_group, schema="path string, n_triples long"
-    )
+    return _write_path_runs(src, convert, "n_triples")
 
 
 def read_hdt_fragments(spark, output_dir: str) -> DataFrame:

@@ -20,8 +20,12 @@ first match, same as JS ``exec()[0]``) and an argmax over
 
 from __future__ import annotations
 
+import os
 import re
+from collections import defaultdict
+from collections.abc import Callable, Iterator
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -178,6 +182,86 @@ def _check_local_master(df: DataFrame, what: str) -> None:
         )
 
 
+def _open_target(output_dir: str, rel: str, mode: str):
+    """Open ``output_dir/rel``, creating its parents lazily
+    (``ParallelFileWriter.ts:51-69``)."""
+    target = os.path.join(output_dir, rel)
+    os.makedirs(os.path.dirname(target) or ".", exist_ok=True)
+    return open(target, mode)
+
+
+def _path_runs(batches) -> Iterator[tuple[str, pa.Table]]:
+    """``(path, rows)`` for each contiguous run of one ``path`` value in a
+    stream of Arrow record batches; a run may span batch boundaries."""
+    import pyarrow.compute as pc
+
+    run_path, run = None, []
+    for batch in batches:
+        n = batch.num_rows
+        if n == 0:
+            continue
+        col = batch.column("path")
+        cuts = pc.indices_nonzero(pc.not_equal(col.slice(1), col.slice(0, n - 1)))
+        bounds = [0, *(i + 1 for i in cuts.to_pylist()), n]
+        for lo, hi in zip(bounds, bounds[1:]):
+            path = col[lo].as_py()
+            if run and path != run_path:
+                yield run_path, pa.Table.from_batches(run)
+                run = []
+            run_path = path
+            run.append(batch.slice(lo, hi - lo))
+    if run:
+        yield run_path, pa.Table.from_batches(run)
+
+
+def _write_path_runs(
+    df: DataFrame, write_one: Callable[[str, pa.Table], int], count_col: str
+) -> DataFrame:
+    """Call ``write_one(path, rows)`` once per distinct ``path`` of ``df``,
+    with all of that path's rows as one Arrow table; returns
+    DataFrame[path, <count_col>] holding what each call returned (the calls
+    run when the frame is acted on).
+
+    ``repartition`` on ``path`` puts every row of a path in one task — AQE
+    may merge such partitions but never splits one, unlike ``rebalance`` —
+    and ``sortWithinPartitions`` makes those rows one contiguous run. One
+    ``mapInArrow`` call per task then walks the task's Arrow batches with
+    :func:`_path_runs`. That is the shuffle and sort
+    ``groupBy().applyInPandas`` plans, without a pandas frame in and one out
+    per file. Row order inside a file is the arrival multiset (SURVEY.md
+    §4.3: parity is per-file quad multisets)."""
+    out_schema = pa.schema([("path", pa.string()), (count_col, pa.int64())])
+
+    def write_runs(batches):
+        paths, counts = [], []
+        for path, rows in _path_runs(batches):
+            paths.append(path)
+            counts.append(write_one(path, rows))
+        if paths:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(paths, pa.string()), pa.array(counts, pa.int64())],
+                schema=out_schema,
+            )
+
+    return (
+        df.repartition(F.col("path"))
+        .sortWithinPartitions("path")
+        .mapInArrow(write_runs, schema=f"path string, {count_col} long")
+    )
+
+
+def _line_writer(output_dir: str, mode: str) -> Callable[[str, pa.Table], int]:
+    """Rows of one path → its ``line`` column as one text file; ``"w"``
+    overwrites (a retried task rewrites its own files), ``"a"`` appends."""
+
+    def write(rel: str, rows: pa.Table) -> int:
+        with _open_target(output_dir, rel, mode) as f:
+            f.write("\n".join(rows.column("line").to_pylist()) + "\n")
+        return rows.num_rows
+
+    return write
+
+
 def write_fragment_files(
     routed_with_path: DataFrame, output_dir: str, output_format: str | None = None
 ) -> DataFrame:
@@ -194,19 +278,13 @@ def write_fragment_files(
     (``GRAPH <g> { … }`` blocks), ``application/ld+json`` (expanded form
     via :func:`~rdf_dataset_fragmenter_js_spark.sources.jsonld.serialize_jsonld`).
 
-    Spark cannot name output files arbitrarily through the native writer, so
-    each (path) group is written by its own task via ``applyInPandas`` —
-    the shuffle co-locates a fragment's quads on one task (the batch analog
-    of the reference's per-file append stream), parents are mkdir-ed
-    lazily (``ParallelFileWriter.ts:51-69``), and file content order is the
-    arrival multiset (SURVEY.md §4.3: parity is per-file quad multisets).
+    Spark cannot name output files arbitrarily through the native writer,
+    so :func:`_write_path_runs` shuffles each path's quads to one task
+    (the batch analog of the reference's per-file append stream) and one
+    ``mapInArrow`` call per task writes every path-sorted run it holds.
 
     Returns DataFrame[path, n_quads] (the write happens when it is acted
     on — e.g. ``.collect()`` — keeping this composable as a plan)."""
-    import os as _os
-
-    import pandas as pd
-
     from rdf_dataset_fragmenter_js_spark.sources.nquads import serialize_nquads
 
     if output_format not in _TEXT_FORMATS:
@@ -217,29 +295,16 @@ def write_fragment_files(
     fmt = _TEXT_FORMATS[output_format]
     _check_local_master(routed_with_path, "write_fragment_files")
 
-    def _write_text(rel: str, text: str) -> None:
-        target = _os.path.join(output_dir, rel)
-        _os.makedirs(_os.path.dirname(target), exist_ok=True)
-        with open(target, "w") as f:
-            f.write(text)
-
     if fmt in ("nquads", "ntriples"):
         src = routed_with_path
         if fmt == "ntriples":
             src = forbid_named_graphs(src)
         lines = serialize_nquads(src).select("path", "line")
-
-        def write_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            _write_text(pdf["path"].iloc[0], "\n".join(pdf["line"]) + "\n")
-            return pd.DataFrame({"path": [pdf["path"].iloc[0]], "n_quads": [len(pdf)]})
-
-        return lines.groupBy("path").applyInPandas(
-            write_group, schema="path string, n_quads long"
-        )
+        return _write_path_runs(lines, _line_writer(output_dir, "w"), "n_quads")
 
     if fmt == "trig":
         # serialize the TRIPLE part of each quad (graph nulled), keep the
-        # graph for block assembly in the group task
+        # graph for block assembly in the writing task
         src = routed_with_path.withColumn("__g", F.col("g")).withColumn(
             "g", F.lit(None).cast("string")
         )
@@ -247,41 +312,35 @@ def write_fragment_files(
             "path", F.col("__g").alias("g"), "line"
         )
 
-        def write_trig(pdf: pd.DataFrame) -> pd.DataFrame:
-            parts = list(pdf[pdf["g"].isna()]["line"])
-            for g, grp in pdf[pdf["g"].notna()].groupby("g", sort=True):
-                g = str(g)
+        def write_trig(rel: str, rows: pa.Table) -> int:
+            parts: list[str] = []
+            named: dict[str, list[str]] = defaultdict(list)
+            for g, line in zip(rows.column("g").to_pylist(), rows.column("line").to_pylist()):
+                (parts if g is None else named[g]).append(line)
+            for g in sorted(named):
                 label = g if g.startswith("_:") else "<" + g + ">"
                 parts.append("GRAPH " + label + " {")
-                parts.extend(grp["line"])
+                parts.extend(named[g])
                 parts.append("}")
-            _write_text(pdf["path"].iloc[0], "\n".join(parts) + "\n")
-            return pd.DataFrame({"path": [pdf["path"].iloc[0]], "n_quads": [len(pdf)]})
+            with _open_target(output_dir, rel, "w") as f:
+                f.write("\n".join(parts) + "\n")
+            return rows.num_rows
 
-        return lines.groupBy("path").applyInPandas(
-            write_trig, schema="path string, n_quads long"
-        )
+        return _write_path_runs(lines, write_trig, "n_quads")
 
     # jsonld: per-fragment expanded-form document from the full term tuples
-    cols = ["path", "s_type", "s", "p", "o_type", "o", "o_datatype", "o_lang", "g"]
+    cols = ["s_type", "s", "p", "o_type", "o", "o_datatype", "o_lang", "g"]
 
-    def write_jsonld(pdf: pd.DataFrame) -> pd.DataFrame:
+    def write_jsonld(rel: str, rows: pa.Table) -> int:
         from rdf_dataset_fragmenter_js_spark.sources.jsonld import serialize_jsonld
 
-        def _n(v):  # pandas may surface missing strings as NaN
-            return None if v is None or (isinstance(v, float) and pd.isna(v)) else v
+        quads = zip(*(rows.column(c).to_pylist() for c in cols))
+        with _open_target(output_dir, rel, "w") as f:
+            f.write(serialize_jsonld(list(quads)))
+        return rows.num_rows
 
-        rows = [
-            (r.s_type, r.s, r.p, r.o_type, r.o, _n(r.o_datatype), _n(r.o_lang), _n(r.g))
-            for r in pdf.itertuples()
-        ]
-        _write_text(pdf["path"].iloc[0], serialize_jsonld(rows))
-        return pd.DataFrame({"path": [pdf["path"].iloc[0]], "n_quads": [len(pdf)]})
-
-    return (
-        routed_with_path.select(*cols)
-        .groupBy("path")
-        .applyInPandas(write_jsonld, schema="path string, n_quads long")
+    return _write_path_runs(
+        routed_with_path.select("path", *cols), write_jsonld, "n_quads"
     )
 
 
@@ -301,27 +360,11 @@ def append_fragment_nquads(routed_with_path: DataFrame, output_dir: str) -> Data
     Appends are at-least-once under micro-batch replay (a batch that fails
     mid-write and restarts re-appends its quads) — the parquet sink path is
     the exactly-once option."""
-    import os as _os
-
-    import pandas as pd
-
     from rdf_dataset_fragmenter_js_spark.sources.nquads import serialize_nquads
 
     _check_local_master(routed_with_path, "append_fragment_nquads")
-
     lines = serialize_nquads(routed_with_path).select("path", "line")
-
-    def append_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        rel = pdf["path"].iloc[0]
-        target = _os.path.join(output_dir, rel)
-        _os.makedirs(_os.path.dirname(target), exist_ok=True)
-        with open(target, "a") as f:
-            f.write("\n".join(pdf["line"]) + "\n")
-        return pd.DataFrame({"path": [rel], "n_quads": [len(pdf)]})
-
-    return lines.groupBy("path").applyInPandas(
-        append_group, schema="path string, n_quads long"
-    )
+    return _write_path_runs(lines, _line_writer(output_dir, "a"), "n_quads")
 
 
 def sink_csv(
@@ -342,7 +385,6 @@ def sink_csv(
     header-carrying CSV dataset for any reader)."""
     import glob as _glob
     import logging
-    import os
 
     from rdf_dataset_fragmenter_js_spark.operators.matchers import TERM_COLUMNS
 

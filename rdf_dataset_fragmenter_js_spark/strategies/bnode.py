@@ -20,9 +20,15 @@ link table of bnode-valued quads, computed to its fixpoint (no iteration
 cap: ownership only grows and is bounded by bnodes × owners). Link tables up
 to ``_DRIVER_LINKS`` rows are closed on the driver in plain Python; larger
 ones run a semi-naive frontier-join loop (``localCheckpoint`` per round to
-cut lineage) that re-joins only the link table, never the quads — at 100 TB
-the quad scan happens once. Both paths compute the same fixpoint, so they
-agree on every input.
+cut lineage) that re-joins only the link table, never the quads. Both paths
+compute the same fixpoint, so they agree on every input.
+
+The quad plan itself is read three times by :func:`route_bnode_quads`: the
+bnode-key probe, the ownership-links pass and, when the routed frame is
+acted on, the write of its named and bnode branches. Callers that act on
+the routed frame therefore persist its input (``run_pipeline_spec`` and the
+streaming micro-batch persist the transformed quads), or each read re-runs
+the whole upstream plan.
 """
 
 from __future__ import annotations
@@ -75,11 +81,9 @@ def _ownership_links(
     quads: DataFrame, key: str, key_type: str, value: str, value_type: str
 ) -> DataFrame:
     """Distinct (__kt, __k, __v) = (key type, key, bnode value) of every
-    bnode-valued quad, checkpointed. A named key owns its bnode value
+    bnode-valued quad. A named key owns its bnode value
     (FragmentationBlankNodeBuffer.ts:53-64); a bnode key links its value
-    into the chain (:83). Both come out of ONE pass over the quads, so the
-    quad plan runs once; the gate fetch and the distributed loop read the
-    checkpoint."""
+    into the chain (:83). Both come out of ONE pass over the quads."""
     return (
         quads.filter(_is(F.col(value_type), BLANK_NODE))
         .select(
@@ -88,7 +92,6 @@ def _ownership_links(
             F.col(value).alias("__v"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
 
@@ -105,11 +108,13 @@ def bnode_owners(
     subject strategy). Returns DataFrame[bnode: string, owner: string].
     Link tables of at most ``_DRIVER_LINKS`` rows come back in one Arrow
     fetch and are closed on the driver; larger ones run
-    :func:`_bnode_owners_distributed`."""
-    links = _ownership_links(quads, key, key_type, value, value_type)
+    :func:`_bnode_owners_distributed`, which reads the persisted link
+    table every round; the driver path releases it after the one fetch."""
+    links = _ownership_links(quads, key, key_type, value, value_type).persist()
     pdf = small_frame(links, _DRIVER_LINKS)
     if pdf is None:
         return _bnode_owners_distributed(links)
+    links.unpersist()
     base = pdf[pdf["__kt"] == NAMED_NODE]
     edges = pdf[pdf["__kt"] == BLANK_NODE]
     pairs = _closure_driver(zip(base["__v"], base["__k"]), zip(edges["__k"], edges["__v"]))

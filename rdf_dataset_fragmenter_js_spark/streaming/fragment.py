@@ -159,21 +159,27 @@ def stream_pipeline_spec(
     def _route_and_write(df: DataFrame) -> None:
         for tr in transformer_specs:
             df = build_transformer(tr)(df)
-        routed = build_strategy(strategy_spec)(df)
-        with_path = map_doc_to_path(
-            routed, sink["iriToPath"], file_extension=sink.get("fileExtension")
-        )
-        if parquet_sink:
-            with_path.write.mode("append").partitionBy("path").parquet(output_dir)
-        else:
-            from rdf_dataset_fragmenter_js_spark.sinks.paths import (
-                append_fragment_nquads,
-                forbid_named_graphs,
+        # read by the strategy's bnode probe, its links pass and the write
+        # (as in run_pipeline_spec), so the batch is transformed once
+        df = df.persist()
+        try:
+            routed = build_strategy(strategy_spec)(df)
+            with_path = map_doc_to_path(
+                routed, sink["iriToPath"], file_extension=sink.get("fileExtension")
             )
+            if parquet_sink:
+                with_path.write.mode("append").partitionBy("path").parquet(output_dir)
+            else:
+                from rdf_dataset_fragmenter_js_spark.sinks.paths import (
+                    append_fragment_nquads,
+                    forbid_named_graphs,
+                )
 
-            if triples_only:
-                with_path = forbid_named_graphs(with_path)
-            append_fragment_nquads(with_path, output_dir).collect()
+                if triples_only:
+                    with_path = forbid_named_graphs(with_path)
+                append_fragment_nquads(with_path, output_dir).collect()
+        finally:
+            df.unpersist()
 
     all_nquads = all(k == "nquads" for k in kinds)
 

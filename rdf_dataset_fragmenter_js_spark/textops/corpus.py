@@ -249,7 +249,7 @@ def prepare_corpus(
     )
     kept = quality_filter(base).where(F.col("keep")).select("doc_id")
     clean = (
-        decontaminate(base, benchmark, n=n)
+        decontaminate(base, benchmark.select(F.col(text_col).alias("text")), n=n)
         .where(~F.col("contaminated"))
         .select("doc_id")
     )

@@ -174,6 +174,39 @@ def test_write_fragment_hdt_spark(spark, tmp_path):
     with pytest.raises(ValueError, match="Unsupported HDT output format"):
         write_fragment_hdt(routed, str(tmp_path / "bad"), "application/ld+json")
 
+    # one writer task, 2-row Arrow batches: each .hdt and each kept source
+    # file holds exactly its fragment's triples, and the counts match
+    from rdf_dataset_fragmenter_js_spark.sources.nquads import read_rdf
+    from tests.conftest import (
+        BOUNDARY_SIZES,
+        SMALL_ARROW_BATCHES,
+        batch_boundary_quads,
+        sql_conf,
+        term_multiset,
+    )
+
+    rows = quads_df(spark, batch_boundary_quads(False)).collect()
+    boundary = map_doc_to_path(
+        route_subject(quads_df(spark, rows)),
+        {r"^http://ex\.org/": ""},
+        file_extension=".nq",
+    )
+    out3 = str(tmp_path / "hdt_boundary")
+    with sql_conf(spark, SMALL_ARROW_BATCHES):
+        written = write_fragment_hdt(
+            boundary, out3, remove_source_files=False, file_extension=".nq"
+        ).collect()
+    assert sorted((r.path, r.n_triples) for r in written) == sorted(
+        (name + ".nq", n) for name, n in BOUNDARY_SIZES.items()
+    )
+    back = read_hdt_fragments(spark, out3).collect()
+    for name in BOUNDARY_SIZES:
+        want = [r for r in rows if r.s == f"http://ex.org/{name}"]
+        hdt = [r for r in back if r.path == name + ".hdt"]
+        assert term_multiset(hdt, graph=False) == term_multiset(want, graph=False), name
+        source = read_rdf(spark, os.path.join(out3, name + ".nq")).collect()
+        assert term_multiset(source) == term_multiset(want), name
+
 
 def test_read_rdf_hdt_source(spark, tmp_path):
     """.hdt dispatches through the QuadSourceFile read path (beyond-reference:

@@ -111,6 +111,57 @@ def test_pipeline_spec_end_to_end(spark, nt_file, tmp_path):
     assert spark.read.parquet(str(tmp_path / "frags_pq")).count() == routed.count()
 
 
+def test_pipeline_runs_release_their_caches(spark, nt_file, tmp_path):
+    """A batch run persists its transformed quads (and the bnode routing
+    persists its link table) only for the run's duration: the number of
+    persisted RDDs is back to its starting value after a successful run,
+    after a run whose sink fails, and after a streaming micro-batch."""
+    import os
+    import shutil
+
+    from rdf_dataset_fragmenter_js_spark.streaming.fragment import stream_pipeline_spec
+
+    def persisted() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    # nt_file has a bnode-subject quad, so the ownership closure runs too
+    spec = {
+        "quadSource": {"@type": "QuadSourceFile", "filePath": nt_file},
+        "transformers": [
+            {
+                "@type": "QuadTransformerReplaceIri",
+                "searchRegex": "^http://example.org",
+                "replacementString": "http://localhost:3000/example.org",
+            }
+        ],
+        "fragmentationStrategy": {"@type": "FragmentationStrategySubject"},
+        "quadSink": {
+            "@type": "QuadSinkFile",
+            "iriToPath": {"^http://localhost:3000/": str(tmp_path) + "/out/"},
+        },
+    }
+    before = persisted()
+    run_pipeline_spec(spark, spec, str(tmp_path / "frags"))
+    assert os.path.exists(tmp_path / "out" / "example.org" / "a")
+    assert persisted() == before
+
+    spec["quadSink"]["iriToPath"] = {"^http://elsewhere/": "x/"}
+    with pytest.raises(Exception, match="No IRI mapping found"):
+        run_pipeline_spec(spark, spec, str(tmp_path / "frags_bad"))
+    assert persisted() == before
+
+    incoming = tmp_path / "incoming"
+    incoming.mkdir()
+    shutil.copy(nt_file, incoming / "batch0.nq")
+    spec["quadSource"] = {"@type": "QuadSourceFile", "filePath": str(incoming)}
+    spec["quadSink"]["iriToPath"] = {"^http://localhost:3000/": str(tmp_path) + "/stream/"}
+    query = stream_pipeline_spec(spark, spec, str(tmp_path / "unused"), str(tmp_path / "ckpt"))
+    query.awaitTermination(120)
+    assert query.exception() is None
+    assert os.path.exists(tmp_path / "stream" / "example.org" / "a")
+    assert persisted() == before
+
+
 def test_multimodal_features(spark):
     from rdf_dataset_fragmenter_js_spark.textops.multimodal import (
         extract_features,

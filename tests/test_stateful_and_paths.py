@@ -301,6 +301,52 @@ def test_write_fragment_files_formats_roundtrip(spark, tmp_path):
     with _pytest.raises(ValueError, match="unsupported outputFormat"):
         write_fragment_files(routed(base, ".nq"), str(tmp_path / "x"), "text/html")
 
+    # one writer task, 2-row Arrow batches: every format's files still hold
+    # exactly their fragment's quads, and the counts match
+    from tests.conftest import (
+        BOUNDARY_SIZES,
+        SMALL_ARROW_BATCHES,
+        batch_boundary_quads,
+        sql_conf,
+        term_multiset,
+    )
+
+    for fmt, ext, graphs in [
+        ("application/n-quads", ".nq", True),
+        ("application/n-triples", ".nt", False),
+        ("application/trig", ".trig", True),
+        ("application/ld+json", ".jsonld", True),
+    ]:
+        rows = quads_df(spark, batch_boundary_quads(graphs)).collect()
+        out = str(tmp_path / "boundary" / ext[1:])
+        with sql_conf(spark, SMALL_ARROW_BATCHES):
+            written = write_fragment_files(routed(rows, ext), out, fmt).collect()
+        assert sorted((r.path, r.n_quads) for r in written) == sorted(
+            (name + ext, n) for name, n in BOUNDARY_SIZES.items()
+        ), fmt
+        for name in BOUNDARY_SIZES:
+            want = term_multiset(r for r in rows if r.s == f"http://ex.org/{name}")
+            assert term_multiset(read_rdf(spark, f"{out}/{name}{ext}").collect()) == want, (
+                fmt,
+                name,
+            )
+
+    # the append writer adds to the files: two calls double every file
+    from rdf_dataset_fragmenter_js_spark.sinks.paths import append_fragment_nquads
+
+    rows = quads_df(spark, batch_boundary_quads(True)).collect()
+    out = str(tmp_path / "boundary" / "append")
+    for _ in range(2):
+        with sql_conf(spark, SMALL_ARROW_BATCHES):
+            written = append_fragment_nquads(routed(rows, ".nq"), out).collect()
+        assert sorted((r.path, r.n_quads) for r in written) == sorted(
+            (name + ".nq", n) for name, n in BOUNDARY_SIZES.items()
+        )
+    for name in BOUNDARY_SIZES:
+        want = term_multiset(r for r in rows if r.s == f"http://ex.org/{name}")
+        got = term_multiset(read_rdf(spark, f"{out}/{name}.nq").collect())
+        assert got == want + want, name
+
 
 def test_pipeline_spec_turtle_output(spark, tmp_path):
     """outputFormat text/turtle flows through the config compiler."""

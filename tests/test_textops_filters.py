@@ -199,6 +199,15 @@ def test_prepare_corpus_stage_composition(spark):
     }
     assert out == {1: ("en", 24, 0), 5: ("en", 24, 1)}
 
+    # a non-default text column names the benchmark's text column too
+    renamed = CP.prepare_corpus(
+        docs.withColumnRenamed("text", "body"),
+        bench.withColumnRenamed("text", "body"),
+        budget_tokens=20,
+        text_col="body",
+    )
+    assert {r["doc_id"]: (r["stream"], r["n_tokens"], r["shard_id"]) for r in renamed.collect()} == out
+
 
 def test_corpus_vocab_topk_and_ties(spark):
     from rdf_dataset_fragmenter_js_spark.textops import corpus as CP
